@@ -282,10 +282,10 @@ object GraphAnn {
     * beam-search each query inside each routed list, then rank the
     * candidates with the probe's own bounded-heap top-k + final window.
     * Output schema == [[IvfIndex.probe]]: (qid, probe_list, vec_id,
-    * score, rank). This is the INTERACTIVE path: the query batch (qid +
-    * vectors) is collected and broadcast, which a driver can afford at
-    * query scale but not corpus scale — whole-corpus callers use
-    * [[probeGraphBatch]].
+    * score, rank). This is the INTERACTIVE path: the routed query batch
+    * (qid + vectors, a projection over the queries) is collected once and
+    * broadcast, which a driver can afford at query scale but not corpus
+    * scale — whole-corpus callers use [[probeGraphBatch]].
     *
     * @param ef beam width, the recall knob; ef >= |list| degenerates to
     *           the exhaustive per-list scan (== IvfIndex.probe output)
@@ -300,7 +300,7 @@ object GraphAnn {
     implicit val encG = Encoders.product[GraphRow]
     implicit val encH = Encoders.product[Hit]
     requireFreshGraph(spark, indexDir)
-    val routed = IvfIndex.route(spark, indexDir, queries, nprobe).localCheckpoint(true)
+    val routed = IvfIndex.route(spark, indexDir, queries, nprobe)
     // query batch to the driver — |queries| × nprobe rows, the same
     // query-scale routing decision every probe variant collects; the
     // probed-list IN-list falls out of the same collect
@@ -350,8 +350,10 @@ object GraphAnn {
   final case class RoutedQuery(qid: Long, qvec: Array[Float], probe_list: Long)
 
   /** Batch-scale graph probe: identical semantics to [[probeGraph]] but the
-    * query batch NEVER lands on the driver — routing stays a distributed
-    * join ([[IvfIndex.route]]'s output), and each probed list's graph is
+    * query batch NEVER lands on the driver — the routed batch
+    * ([[IvfIndex.route]]'s output) is checkpointed once, because its two
+    * consumers (the list distinct and the cogroup) would otherwise each
+    * re-read the batch-scale query input, and each probed list's graph is
     * cogrouped with the queries routed to it, so a dedup-style
     * "probe with the whole corpus" call is bounded by (largest list +
     * its routed queries) per task instead of |corpus| driver memory.

@@ -139,19 +139,67 @@ object IvfIndex {
     */
   val CentroidLiteralBound = 1000000L
 
+  /** The persisted centroid table as (cl: long list id, centroid). */
+  private def centroidTable(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.parquet(centroidsPath(indexDir))
+      .select(col("label").cast("long").as("cl"), col("centroid"))
+
+  /** The centroid table as ONE typed array literal of (list id, centroid)
+    * pairs, or None when nlist × dim exceeds `literalBound` — the single
+    * loader behind both scan-local rules (assignment in
+    * [[withNearestList]], routing in [[route]]). The table is
+    * DECISION-scale (nlist rows), so one driver collect replaces a
+    * broadcast relation and every join over it.
+    *
+    * `shape` is (nlist, dim) when the caller already knows it — from the
+    * catalog ([[IndexMeta]]) on append and probe. None reads it from the
+    * table itself (a metadata-only count plus one row): the build path,
+    * whose directory may still hold a previous build's `_meta.json`, and
+    * pre-catalog layouts.
+    */
+  private def centroidLiteral(spark: SparkSession, indexDir: String,
+                              shape: Option[(Long, Int)], literalBound: Long): Option[Column] = {
+    val centDf = centroidTable(spark, indexDir)
+    val (nlist, dim) = shape.getOrElse {
+      val n = centDf.count()
+      require(n > 0, s"empty centroid table at ${centroidsPath(indexDir)}")
+      (n, centDf.select(size(col("centroid"))).head().getInt(0))
+    }
+    if (nlist * dim > literalBound) None
+    else Some(typedLit(centDf.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq))
+  }
+
+  /** The column the [[centroidLiteral]] is bound to for [[centroidScores]];
+    * the optimizer inlines it (CollapseProject), so it never reaches a row.
+    */
+  private val CentroidsCol = "graft_centroids"
+
+  /** THE nearest-centroid rule over the vector column `v`, as one struct
+    * per centroid of [[CentroidsCol]]: cs = round(cosine(v, centroid), 6)
+    * and neg = −list id. Struct order (cs desc, neg desc) is (score desc,
+    * list id asc), so `array_max` gives the assignment and a descending
+    * `sort_array` gives the routing order — one expression, so assignment
+    * and routing cannot drift on rounding or tie-breaks. Written as SQL
+    * text so the lambda variable has a fixed name (the Column API numbers
+    * its lambda variables per call): two routings of one batch compile to
+    * identical plans, which q184's plan pin relies on.
+    */
+  private def centroidScores(v: String): Column =
+    expr(s"transform($CentroidsCol, c -> named_struct(" +
+      s"'cs', round(graft_cosine($v, c._2), 6), 'neg', c._1 * -1L))")
+
   /** Scan-local nearest-centroid assignment (optimization guide §2.4,
-    * round 17): the centroid table is DECISION-scale (nlist rows — the
-    * same table the old path collected into a broadcast anyway), so the
-    * argmax needs no distributed plan at all. Collect it once, embed it
-    * as ONE array literal, and compute each row's nearest centroid as a
-    * projection: `array_max` over the per-centroid (cs, −cl) structs is
-    * exactly the former `max_by(struct(...), struct(cs, neg))` rule —
+    * round 17): each row's nearest centroid is a projection over the
+    * [[centroidLiteral]] — `array_max` of [[centroidScores]], i.e.
     * cs = round(cosine(embedding, centroid), 6), ties to the smaller
     * centroid id. The former shape (crossJoin(broadcast) → ×nlist rows →
     * groupBy(vec_id) max_by) paid an EXCHANGE carrying every embedding
     * before the layout repartition; at 100 TB that was a second full
     * corpus shuffle, here the corpus crosses exactly one exchange (the
     * layout co-location). Returns `df` plus a `list_id` (long) column.
+    *
+    * `shape` is the catalog's (nlist, dim) when the caller has it (append);
+    * None reads it from the centroid table (build).
     *
     * Beyond [[CentroidLiteralBound]] elements the assignment runs as the
     * former broadcast-join shape instead (round 18): same
@@ -161,37 +209,35 @@ object IvfIndex {
     */
   private[graft] def withNearestList(spark: SparkSession, df: DataFrame,
                                      indexDir: String,
-                                     literalBound: Long = CentroidLiteralBound): DataFrame = {
-    val centDf = spark.read.parquet(centroidsPath(indexDir))
-      .select(col("label").cast("long").as("cl"), col("centroid"))
-    // nlist from the parquet footers (metadata-only count), dim from one row
-    val nlist = centDf.count()
-    require(nlist > 0, s"withNearestList: empty centroid table at ${centroidsPath(indexDir)}")
-    val dim = centDf.select(size(col("centroid"))).head().getInt(0)
-    if (nlist * dim <= literalBound) {
-      val cents: Seq[(Long, Seq[Double])] = centDf
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      val centArr = typedLit(cents)
-      val best = array_max(transform(centArr, c => struct(
-        round(GraftFunctions.cosine(col("embedding"), c.getField("_2")), 6).as("cs"),
-        (c.getField("_1") * -1L).as("neg"))))
-      df.withColumn("list_id", (best.getField("neg") * -1L).cast("long"))
-    } else {
-      // broadcast-join fallback: centroid table too large for a plan
-      // literal but still broadcast-relation-sized; each row explodes
-      // ×nlist through the join and the groupBy(vec_id) argmax reduces it
-      // back — one assignment exchange, the pre-round-17 shape
-      val others = df.columns.filterNot(_ == "vec_id")
-      val payload = struct(others.map(col) :+ col("cl").cast("long").as("list_id"): _*)
-      df.crossJoin(broadcast(centDf))
-        .withColumn("cs",
-          round(GraftFunctions.cosine(col("embedding"), col("centroid")), 6))
-        .groupBy(col("vec_id"))
-        .agg(max_by(payload, struct(col("cs"), (col("cl") * -1L).as("neg"))).as("p"))
-        .select(df.columns.map(c =>
-          if (c == "vec_id") col("vec_id") else col(s"p.$c").as(c)) :+
-          col("p.list_id").as("list_id"): _*)
+                                     shape: Option[(Long, Int)] = None,
+                                     literalBound: Long = CentroidLiteralBound): DataFrame =
+    centroidLiteral(spark, indexDir, shape, literalBound) match {
+      case Some(cents) =>
+        val best = array_max(centroidScores("embedding"))
+        df.withColumn(CentroidsCol, cents)
+          .withColumn("list_id", (best.getField("neg") * -1L).cast("long"))
+          .drop(CentroidsCol)
+      case None =>
+        nearestListByJoin(df, centroidTable(spark, indexDir))
     }
+
+  /** Broadcast-join fallback of [[withNearestList]]: the centroid table
+    * is too large for a plan literal but still broadcast-relation-sized;
+    * each row explodes ×nlist through the join and the groupBy(vec_id)
+    * argmax reduces it back — one assignment exchange, the pre-round-17
+    * shape.
+    */
+  private def nearestListByJoin(df: DataFrame, centDf: DataFrame): DataFrame = {
+    val others = df.columns.filterNot(_ == "vec_id")
+    val payload = struct(others.map(col) :+ col("cl").cast("long").as("list_id"): _*)
+    df.crossJoin(broadcast(centDf))
+      .withColumn("cs",
+        round(GraftFunctions.cosine(col("embedding"), col("centroid")), 6))
+      .groupBy(col("vec_id"))
+      .agg(max_by(payload, struct(col("cs"), (col("cl") * -1L).as("neg"))).as("p"))
+      .select(df.columns.map(c =>
+        if (c == "vec_id") col("vec_id") else col(s"p.$c").as(c)) :+
+        col("p.list_id").as("list_id"): _*)
   }
 
   /** Shared write side of [[build]]/[[buildUnsupervised]]: persist the
@@ -370,52 +416,94 @@ object IvfIndex {
     writeIndex(emb, centroids, indexDir)
   }
 
-  /** Probe the persisted index: route each query to its nearest `nprobe`
-    * centroids, scan ONLY those list partitions, exact top-k inside them.
-    * Returns (qid, probe_list, vec_id, score, rank).
-    */
   /** Query routing — nearest `nprobe` centroids per query by cosine,
-    * ties to the smaller list id. Returns (qid, qvec, carry..., probe_list);
-    * shared by [[probe]], [[probeFiltered]] and the PQ-compressed probe
-    * ([[Pq]]). `carry` names extra query columns (e.g. a payload
-    * predicate's value) threaded through unchanged — ONE routing
-    * implementation, so tie-breaks and rounding can never drift between
-    * the probe variants.
+    * ties to the smaller list id. Returns (qid, qvec, carry...,
+    * [route_rank,] probe_list); shared by every probe variant ([[probe]],
+    * [[probeFiltered]], [[probeSql]], [[Pq.probeCompressed]],
+    * [[GraphAnn.probeGraph]]). `carry` names extra query columns (e.g. a
+    * payload predicate's value) threaded through unchanged.
+    *
+    * Routing is a scan-local projection over the queries: each query
+    * scores the [[centroidLiteral]] with [[centroidScores]] — the very
+    * rule [[withNearestList]] assigns points by — and keeps the first
+    * `nprobe` of the descending sort (`slice` + `posexplode`). No join,
+    * window or exchange: the routed frame costs no Spark job of its own,
+    * so consumers can re-read it instead of checkpointing it. The literal
+    * is used when the catalog's nlist × dim is within
+    * [[CentroidLiteralBound]]; above it, and for a pre-catalog layout,
+    * routing runs as a broadcast cross join ranked by a window over the
+    * same (score desc, list id asc) order — row-identical (IvfIndexSpec
+    * pins the two), the same bounded cutover as assignment.
+    *
+    * keepRank additionally emits the routing rank as `route_rank` so a
+    * caller comparing SEVERAL nprobe settings (q64's recall curve) can
+    * route+scan once at the widest setting and recover each narrower
+    * probe by `route_rank <= np` — the same rows route() would emit at
+    * that nprobe, since the (score desc, list id asc) order is total and
+    * therefore rank-prefix-stable.
     */
   def route(spark: SparkSession, indexDir: String, queries: DataFrame,
             nprobe: Int, carry: Seq[String] = Nil,
-            keepRank: Boolean = false): DataFrame = {
+            keepRank: Boolean = false): DataFrame =
+    routeWith(spark, indexDir, queries, nprobe, carry, keepRank, CentroidLiteralBound)
+
+  /** [[route]] with the literal cutover as a parameter, so a spec can
+    * force the broadcast-join shape (bound 0) on a small index.
+    */
+  private[graft] def routeWith(spark: SparkSession, indexDir: String, queries: DataFrame,
+                               nprobe: Int, carry: Seq[String], keepRank: Boolean,
+                               literalBound: Long): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
-    val centroids = spark.read.parquet(centroidsPath(indexDir))
-    val carryCols = carry.map(col)
-    // keepRank additionally emits the routing rank as `route_rank` so a
-    // caller comparing SEVERAL nprobe settings (q64's recall curve) can
-    // route+scan once at the widest setting and recover each narrower
-    // probe by `route_rank <= np` — the same rows route() would emit at
-    // that nprobe, since row_number over (cscore desc, label asc) is
-    // deterministic and rank-prefix-stable.
-    val rankCols = if (keepRank) Seq(col("rn").cast("long").as("route_rank")) else Nil
-    queries
-      .crossJoin(broadcast(centroids))
-      .select(Seq(col("qid"), col("qvec")) ++ carryCols ++ Seq(col("label"),
-        round(GraftFunctions.cosine(col("qvec"), col("centroid")), 6).as("cscore")): _*)
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
-          .orderBy(col("cscore").desc, col("label").asc)))
-      .filter(col("rn") <= nprobe)
-      .select(Seq(col("qid"), col("qvec")) ++ carryCols ++ rankCols :+
-        col("label").cast("long").as("probe_list"): _*)
+    val head = Seq(col("qid"), col("qvec")) ++ carry.map(col)
+    val cents = readMeta(spark, indexDir).flatMap(m =>
+      centroidLiteral(spark, indexDir, Some((m.nlist, m.dim)), literalBound))
+    val ranked = cents match {
+      case Some(c) =>
+        // the nprobe-element slice is projected BEFORE the explode, so the
+        // literal folds into that projection instead of riding every row
+        val nearest = slice(sort_array(centroidScores("qvec"), asc = false),
+          1, math.max(nprobe, 0))
+        queries.withColumn(CentroidsCol, c)
+          .select(head :+ nearest.as("route_nearest"): _*)
+          .select(head :+ posexplode(col("route_nearest")).as(Seq("route_pos", "route_c")): _*)
+          .select(head ++ Seq((col("route_pos") + 1).cast("long").as("route_rank"),
+            (col("route_c.neg") * -1L).as("probe_list")): _*)
+      case None =>
+        queries
+          .crossJoin(broadcast(centroidTable(spark, indexDir)))
+          .select(head ++ Seq(col("cl"),
+            round(GraftFunctions.cosine(col("qvec"), col("centroid")), 6).as("cscore")): _*)
+          .withColumn("route_rank", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
+              .orderBy(col("cscore").desc, col("cl").asc)).cast("long"))
+          .filter(col("route_rank") <= nprobe)
+          .select(head ++ Seq(col("route_rank"), col("cl").as("probe_list")): _*)
+    }
+    val rankCols = if (keepRank) Seq(col("route_rank")) else Nil
+    ranked.select(head ++ rankCols :+ col("probe_list"): _*)
   }
 
+  /** The routed list set as a sorted literal IN-list: a driver-side
+    * distinct over the collected `probe_list` column, which is
+    * query-scale (nprobe × |queries| longs) — no DISTINCT shuffle. This
+    * literal is what turns the `list_id` predicate into a static
+    * partition filter. Batch-scale callers ([[GraphAnn.probeGraphBatch]])
+    * keep a distributed distinct instead.
+    */
+  private[operators] def probedLists(routed: DataFrame): Seq[Long] =
+    routed.select(col("probe_list")).collect().map(_.getLong(0)).distinct.sorted.toSeq
+
+  /** Probe the persisted index: [[route]] each query to its nearest
+    * `nprobe` centroids, scan ONLY those list partitions ([[probedLists]]
+    * as the partition filter), exact top-k inside them. The scoring join
+    * broadcasts the routed frame, which re-evaluates as a projection over
+    * the queries. Returns (qid, probe_list, vec_id, score, rank).
+    */
   def probe(spark: SparkSession, indexDir: String, queries: DataFrame,
             k: Int = 3, nprobe: Int = 1): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
     val routed = route(spark, indexDir, queries, nprobe)
-
-    // The routing decision: nprobe × |queries| ints — this literal IN-list
-    // is what turns the list_id predicate into a static partition filter.
-    val lists = routed.select(col("probe_list")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val lists = probedLists(routed)
     // LWW over the pruned rows: a re-upserted id inside a probed list never
     // surfaces stale. A re-upsert whose embedding MOVED lists leaves a stale
     // row in the old list until [[compact]] runs — the documented
@@ -483,16 +571,13 @@ object IvfIndex {
                     k: Int = 3, nprobe: Int = 1,
                     pushLabelFilter: Boolean = false): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
-    // routing is computed ONCE (query-scale localCheckpoint): three
-    // driver-side reads below plus the scoring join would otherwise
-    // re-run the centroid crossJoin per consumer
+    // ONE driver read of the query-scale routing decision yields both
+    // IN-lists; the scoring join re-evaluates the routed projection inside
+    // its broadcast
     val routed = route(spark, indexDir, queries, nprobe, carry = Seq("qlabel"))
-      .localCheckpoint(true)
-
-    val lists = routed.select(col("probe_list")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val qlabels = routed.select(col("qlabel")).distinct()
-      .collect().map(_.get(0)).sortBy(_.toString).toSeq
+    val decision = routed.select(col("probe_list"), col("qlabel")).collect()
+    val lists = decision.map(_.getLong(0)).distinct.sorted.toSeq
+    val qlabels = decision.map(_.get(1)).distinct.sortBy(_.toString).toSeq
     // ORDER MATTERS: last-writer-wins FIRST, label cut AFTER — filtering
     // versions by label before LWW would resurrect a superseded row whose
     // OLD label matches the query. The scan-level label pushdown
@@ -534,8 +619,15 @@ object IvfIndex {
     * returns a stale duplicate. Appends touch only the affected list
     * directories; nothing is rewritten.
     */
-  def append(spark: SparkSession, newVectors: DataFrame, indexDir: String, version: Long): Unit =
+  def append(spark: SparkSession, newVectors: DataFrame, indexDir: String, version: Long): Unit = {
+    // version 0 is the build's: an append stamped 0 (or below) would be
+    // indistinguishable from built rows, and the catalog's
+    // `nextVersion == 1` would no longer prove a build-only layout — the
+    // fact [[latestPointsFor]] skips the LWW window on
+    require(version >= 1L,
+      s"append: version $version < 1 at $indexDir — version 0 is reserved for the build")
     doAppend(spark, newVectors, indexDir, version, readMeta(spark, indexDir))
+  }
 
   /** Catalog-guarded append: the version is auto-assigned from the index's
     * `_meta.json` counter (and the counter bumped), so callers never thread
@@ -582,10 +674,11 @@ object IvfIndex {
       else newVectors.withColumn("label", lit(-1L))
     // scan-local assignment against the EXISTING centroid table — the
     // same [[withNearestList]] rule as the build, so append and build can
-    // never drift (and the batch crosses no assignment exchange)
+    // never drift (and the batch crosses no assignment exchange); the
+    // catalog supplies nlist × dim for the literal cutover
     withNearestList(spark,
       labeled.select(col("label"), col("vec_id"), col("embedding"),
-        lit(version).as("version")), indexDir)
+        lit(version).as("version")), indexDir, meta.map(m => (m.nlist, m.dim)))
       // co-locate each list before the partitioned write (the writeIndex
       // discipline): one file per touched list per batch instead of
       // input-partitions x lists small files
@@ -792,9 +885,9 @@ object IvfIndex {
     *
     * 100 TB: identical scan economics to q38 (the probe never reads
     * outside the routed lists; compaction is one LWW pass over the
-    * layout, the same job any LSM store runs); the append batch itself
-    * shuffles only batch-scale rows against the broadcast centroid
-    * table.
+    * layout, the same job any LSM store runs); the append batch is
+    * assigned scan-locally against the centroid literal and shuffles only
+    * batch-scale rows, for the layout co-location.
     */
   def upsertSearch(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
@@ -1125,23 +1218,6 @@ object IvfIndex {
 
   // --- SQL surface for the index family (VERDICT r16 item 8) --------------
 
-  /** The routing statement a SQL-only user types — [[route]]'s exact
-    * declaration as text: broadcast the centroid table into a cross
-    * join, rank by the 6-dp-rounded `graft_cosine`, keep the nearest
-    * `nprobe` (ties to the smaller list id).
-    */
-  def routeSqlText(nprobe: Int): String =
-    s"""SELECT qid, qvec, CAST(label AS BIGINT) AS probe_list
-       |FROM (
-       |  SELECT qid, qvec, label,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cscore DESC, label) AS rn
-       |  FROM (
-       |    SELECT /*+ BROADCAST(c) */ q.qid, q.qvec, c.label,
-       |           round(graft_cosine(q.qvec, c.centroid), 6) AS cscore
-       |    FROM graft_ivf_queries q CROSS JOIN graft_ivf_centroids c
-       |  )
-       |) WHERE rn <= $nprobe""".stripMargin
-
   /** The probe statement — [[probe]]'s scan/LWW/score/rank tail as text.
     * `lists` arrives as a literal IN-list exactly like the core's
     * driver-side `isin` (the routing decision IS a literal in both
@@ -1193,49 +1269,43 @@ object IvfIndex {
        |ORDER BY qid, rank""".stripMargin
   }
 
-  /** [[probe]] through the SQL surface: the persisted layout exposed as
-    * `graft_ivf_centroids` / `graft_ivf_points` temp views (plus the
-    * query batch as `graft_ivf_queries`), the routing statement
-    * materialized as a temp view, the routed list set read back with a
-    * DISTINCT (the collect the core also performs — the decision is
-    * driver-side in both routes), and the probe statement run with the
-    * IN-list interpolated. Same registered functions (`graft_cosine`,
-    * the bounded-heap `graft_topk<k>` aggregate), same collision-guarded
-    * register→analyze→drop discipline as the relational SQL surface;
-    * SqlIndexSpec pins the result plan-identical to [[probe]]'s.
+  /** [[probe]] through the SQL surface: the persisted points exposed as
+    * the `graft_ivf_points` temp view, the core's [[route]] output
+    * registered as the `graft_ivf_routed` view — ONE routing implementation for
+    * both routes, so the SQL probe cannot drift from the DataFrame probe
+    * on rounding, tie-breaks or the literal cutover — the routed list set
+    * read back with the core's driver-side [[probedLists]], and the probe
+    * statement run with the IN-list interpolated. Same registered
+    * functions (`graft_cosine`, the bounded-heap `graft_topk<k>`
+    * aggregate), same collision-guarded register→analyze→drop discipline
+    * as the relational SQL surface; SqlIndexSpec pins the result
+    * plan-identical to [[probe]]'s.
     */
   def probeSql(spark: SparkSession, indexDir: String, queries: DataFrame,
                k: Int = 3, nprobe: Int = 1): DataFrame = RelationalSql.synchronized {
     GraftFunctions.ensureRegistered(spark)
     val tkName = Knn.ensureTopk(spark, k)
-    val frames: Seq[(String, DataFrame)] = Seq(
-      "graft_ivf_centroids" -> spark.read.parquet(centroidsPath(indexDir)),
-      "graft_ivf_points"    -> spark.read.parquet(pointsPath(indexDir)),
-      "graft_ivf_queries"   -> queries)
-    (frames.map(_._1) :+ "graft_ivf_routed").foreach { name =>
+    val views = Seq("graft_ivf_points", "graft_ivf_routed")
+    views.foreach { name =>
       require(!spark.catalog.tableExists(name),
         s"SQL surface: temp view '$name' already exists in this session — " +
           "drop or rename it; the graft_-prefixed names are reserved during a declared SQL query")
     }
-    frames.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    val routed = route(spark, indexDir, queries, nprobe)
     try {
-      spark.sql(routeSqlText(nprobe)).createOrReplaceTempView("graft_ivf_routed")
-      try {
-        val lists = spark
-          .sql("SELECT DISTINCT probe_list FROM graft_ivf_routed ORDER BY probe_list")
-          .collect().map(_.getLong(0)).toSeq
-        // same catalog fact, same decision as the core's latestPointsFor
-        val versionUnique = readMeta(spark, indexDir).exists(_.nextVersion == 1L)
-        spark.sql(probeTailSqlText(k, lists, tkName, versionUnique))
-      } finally spark.catalog.dropTempView("graft_ivf_routed")
-    } finally frames.foreach { case (name, _) => spark.catalog.dropTempView(name) }
+      spark.read.parquet(pointsPath(indexDir)).createOrReplaceTempView("graft_ivf_points")
+      routed.createOrReplaceTempView("graft_ivf_routed")
+      // same catalog fact, same decision as the core's latestPointsFor
+      val versionUnique = readMeta(spark, indexDir).exists(_.nextVersion == 1L)
+      spark.sql(probeTailSqlText(k, probedLists(routed), tkName, versionUnique))
+    } finally views.foreach(spark.catalog.dropTempView)
   }
 
   /** q184_sql_index_probe — q38's lifecycle with the probe THROUGH THE
     * SQL SURFACE, declared under q38's oracle VERBATIM: build the
-    * persisted index, then route + probe as the two `spark.sql`
-    * statements a SQL-only user types. A green hash puts the SQL-user
-    * path to the persisted index under the driver's gate (the q01/q26
+    * persisted index, route with the core's [[route]], then probe as the
+    * `spark.sql` statement a SQL-only user types. A green hash puts the
+    * SQL-user path to the persisted index under the driver's gate (the q01/q26
     * discipline extended to the index family), and the SqlIndexSpec
     * plan pin proves it costs exactly the DataFrame core's plan — same
     * partition-pruned scan, same broadcast, same bounded heap.

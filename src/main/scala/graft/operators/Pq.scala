@@ -284,7 +284,10 @@ object Pq {
     * shortlist covering the probed lists entirely, this equals
     * [[IvfIndex.probe]] exactly (property-tested) — the compression is
     * then free; smaller shortlists trade recall for a rerank bounded by
-    * |queries|·shortlist float reads.
+    * |queries|·shortlist float reads. The routed frame is a projection
+    * over the queries, so it is read once on the driver (IN-list, probe
+    * sets, ADC tables) and re-evaluated inside the rerank broadcast — no
+    * checkpoint.
     */
   def probeCompressed(spark: SparkSession, indexDir: String, cb: Codebooks,
                       queries: DataFrame, k: Int = 3, nprobe: Int = 1,
@@ -293,18 +296,17 @@ object Pq {
     import graft.functions.GraftFunctions
     GraftFunctions.ensureRegistered(spark)
 
-    // routing computed ONCE (query-scale localCheckpoint) — the three
-    // driver-side derivations below and the rerank join all read the
-    // materialized batch instead of re-running the centroid crossJoin
-    val routed = IvfIndex.route(spark, indexDir, queries, nprobe).localCheckpoint(true)
-    val lists = routed.select(col("probe_list")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // per-query ADC tables + each query's own probed-list set (query-scale)
-    val probeSets: Map[Long, Set[Long]] = routed.select(col("qid"), col("probe_list"))
-      .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val tables: Array[(Long, Array[Array[Double]])] = routed
-      .select(col("qid"), normalize(toDouble(col("qvec"))).as("u"))
-      .as[(Long, Seq[Double])].collect().distinct
+    // ONE driver read of the query-scale routing decision: the probed
+    // IN-list, each query's own probed-list set and its ADC table
+    val routed = IvfIndex.route(spark, indexDir, queries, nprobe)
+    val decision = routed
+      .select(col("qid"), col("probe_list"), normalize(toDouble(col("qvec"))).as("u"))
+      .as[(Long, Long, Seq[Double])].collect()
+    val lists = decision.map(_._2).distinct.sorted.toSeq
+    val probeSets: Map[Long, Set[Long]] =
+      decision.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val tables: Array[(Long, Array[Array[Double]])] = decision
+      .map { case (qid, _, u) => (qid, u) }.distinct
       .map { case (qid, u) => (qid, adcTable(u.toArray, cb)) }
 
     // partition-pruned ADC scan: each code row scores only against queries

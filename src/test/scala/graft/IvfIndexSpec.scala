@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.IvfIndex
 
 /** Persistent IVF index lifecycle: build writes a pruned-readable layout,
@@ -144,6 +146,157 @@ class IvfIndexSpec extends AnyFunSuite {
     // the fallback must also preserve every column the literal path does
     val cols = IvfIndex.withNearestList(spark, in, dir, literalBound = 0L).columns.toSeq
     assert(cols == Seq("label", "vec_id", "embedding", "version", "list_id"))
+  }
+
+  test("routing literal and broadcast-join paths agree row-for-row, planted ties included (CentroidLiteralBound cutover)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(43)
+    val dim = 8
+    def draw(): Seq[Double] = Seq.fill(dim)(math.rint(rnd.nextGaussian() * 1e6) / 1e6)
+    def dot(a: Seq[Double], b: Seq[Double]): Double = a.zip(b).map { case (x, y) => x * y }.sum
+    // seven random clusters, plus lists 7 and 8 holding the SAME vectors:
+    // their mean centroids are identical, a planted exact tie
+    val twins = Seq.fill(10)(draw())
+    val emb = ((0L until 210L).map(i => (i, (i % 7).toInt, draw())) ++
+      twins.zipWithIndex.flatMap { case (v, j) => Seq((210L + 2 * j, 7, v), (211L + 2 * j, 8, v)) })
+      .toDF("vec_id", "label", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_routecut").toString
+    IvfIndex.build(spark, emb, dir)
+    val cents = spark.read.parquet(IvfIndex.centroidsPath(dir)).collect()
+      .map(r => r.getAs[Number]("label").longValue -> r.getSeq[Double](1)).toMap
+    val nlist = cents.size
+    assert(nlist == 9 && cents(7L) == cents(8L))
+    // queries: random draws; a twin centroid itself (top-1 tie); the zero
+    // vector (every score 0.0); and per centroid a draw projected
+    // orthogonal to it, both signs (scores that round to 0.0 from above
+    // and from below)
+    val orth = cents.toSeq.sortBy(_._1).flatMap { case (_, c) =>
+      val v = draw()
+      val a = dot(v, c) / dot(c, c)
+      val o = v.zip(c).map { case (x, y) => x - a * y }
+      Seq(o, o.map(-_))
+    }
+    val qs = Seq.fill(40)(draw()) ++ Seq(cents(7L), Seq.fill(dim)(0.0)) ++ orth
+    val queries = qs.zipWithIndex.map { case (v, i) => (i.toLong, v, s"t$i") }.toDF("qid", "qvec", "tag")
+    def routed(np: Int, bound: Long) =
+      IvfIndex.routeWith(spark, dir, queries, np, carry = Seq("tag"), keepRank = true, bound)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "probe_list", "route_rank", "tag").orderBy("qid", "route_rank")
+        .collect().map(_.toSeq).toSeq
+    for (np <- Seq(1, 2, 4, nlist + 3)) {
+      val lit_ = routed(np, IvfIndex.CentroidLiteralBound)
+      val bcast = routed(np, 0L)
+      assert(lit_.columns.toSeq == Seq("qid", "qvec", "tag", "route_rank", "probe_list") &&
+        lit_.columns.toSeq == bcast.columns.toSeq)
+      val (l, b) = (rowsOf(lit_), rowsOf(bcast))
+      assert(l.size == qs.size * math.min(np, nlist) && l == b,
+        s"nprobe=$np: literal and broadcast-join routing must be row-identical " +
+          "(same (score desc, list id asc) order)")
+      // the literal route is a projection: no join, window or exchange
+      val plan = lit_.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join") && !plan.contains("Window") && !plan.contains("Exchange"),
+        s"the literal route must be scan-local;\n$plan")
+    }
+    // the planted ties break toward the smaller list id in both paths
+    val twinQ = routed(2, IvfIndex.CentroidLiteralBound).filter(col("qid") === 40L)
+      .orderBy("route_rank").select("probe_list").as[Long].collect().toSeq
+    assert(twinQ == Seq(7L, 8L))
+    val zeroQ = routed(3, IvfIndex.CentroidLiteralBound).filter(col("qid") === 41L)
+      .orderBy("route_rank").select("probe_list").as[Long].collect().toSeq
+    assert(zeroQ == Seq(0L, 1L, 2L))
+    // a pre-catalog layout routes through the broadcast join, same rows
+    new java.io.File(IvfIndex.metaPath(dir)).delete()
+    val preCatalog = IvfIndex.route(spark, dir, queries, nprobe = 2, carry = Seq("tag"), keepRank = true)
+    assert(preCatalog.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+    assert(rowsOf(preCatalog) == rowsOf(routed(2, IvfIndex.CentroidLiteralBound)))
+  }
+
+  /** Spark jobs `body` starts, counted by a listener over a span-scoped
+    * local property (inherited by the broadcast and stage threads).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobcount"
+    val id = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == id)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, id)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.GraftTestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("job-count pin: a catalogued probe and a catalogued append run a fixed number of Spark jobs") {
+    // job counts are deterministic where fixture-scale wall time is not:
+    // an extra driver action on the probe or append path (a collect, a
+    // count, a checkpoint, a DISTINCT shuffle) changes the count and
+    // fails here. The counts cover the driver-side actions inside each
+    // call plus, for the probe, the jobs of collecting its result.
+    val emb = Tables.embeddings(spark, TestSpark.Sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_jobpin").toString
+    IvfIndex.build(spark, emb, dir)
+    val queries = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val probeJobs = jobsOf(IvfIndex.probe(spark, dir, queries, k = 3, nprobe = 1).collect())
+    val appendJobs = jobsOf(IvfIndex.append(spark, emb.filter(col("vec_id") % 50 === 0), dir))
+    assert((probeJobs, appendJobs) == ((10, 5)),
+      s"probe ran $probeJobs jobs, append ran $appendJobs")
+  }
+
+  test("a rebuild over an existing index dir with a different nlist assigns exactly like a fresh build") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(47)
+    val vecs = (0L until 240L).map(i => (i, Seq.fill(8)(math.rint(rnd.nextGaussian() * 1e6) / 1e6)))
+    def labeled(mod: Int) =
+      vecs.map { case (i, v) => (i, (i % mod).toInt, v) }.toDF("vec_id", "label", "embedding")
+    val reused = java.nio.file.Files.createTempDirectory("graft_ivf_rebuild").toString
+    IvfIndex.build(spark, labeled(7), reused)
+    IvfIndex.build(spark, labeled(3), reused) // over the 7-list build's catalog
+    val fresh = java.nio.file.Files.createTempDirectory("graft_ivf_rebuild_fresh").toString
+    IvfIndex.build(spark, labeled(3), fresh)
+    def layout(dir: String): Set[(Long, Long, Long)] =
+      spark.read.parquet(IvfIndex.pointsPath(dir))
+        .select(col("vec_id"), col("list_id").cast("long"), col("version"))
+        .as[(Long, Long, Long)].collect().toSet
+    assert(layout(reused).size == 240 && layout(reused) == layout(fresh))
+    assert(IvfIndex.readMeta(spark, reused).map(_.nlist).contains(3L))
+    // and the catalog-driven append path then agrees as well
+    val batch = labeled(3).filter(col("vec_id") % 10 === 0)
+      .withColumn("embedding", reverse(col("embedding")))
+    IvfIndex.append(spark, batch, reused)
+    IvfIndex.append(spark, batch, fresh)
+    assert(layout(reused) == layout(fresh))
+  }
+
+  test("an explicit-version append below 1 is rejected and leaves the index byte-identical") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_v0").toString
+    val emb = Tables.embeddings(spark, TestSpark.Sf0001)
+    IvfIndex.build(spark, emb, dir)
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val before = snapshot()
+    assert(before.contains("_meta.json") && before.keys.exists(_.startsWith("points/")))
+    for (v <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException] {
+        IvfIndex.append(spark, emb.filter(col("vec_id") === 0), dir, version = v)
+      }
+      assert(e.getMessage.contains("version"), e.getMessage)
+    }
+    assert(snapshot() == before, "a rejected append must not touch the points layout or _meta.json")
   }
 
   test("append upserts supersede on probe; compact removes stale rows") {
