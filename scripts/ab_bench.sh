@@ -13,7 +13,10 @@
 # BENCHMARK.json, each side's median and quartiles and the change's
 # pair-win count (ties count for neither side), and whether the gain rule
 # holds: at least 10 pairs, wins on >= 9/10 of them, and a median gap larger
-# than the parent's interquartile range. It reads the benchmark and never edits it.
+# than the parent's interquartile range. After the pairs it runs one traced
+# run per side on the first seed and prints every per-layer `*.jobs` metric
+# side by side: job counts repeat exactly per seed, so they show where a
+# wall-time difference comes from. It reads the benchmark and never edits it.
 #
 # Environment:
 #   AB_SECONDS     run length passed to run.py (default: BENCHMARK.json run_seconds)
@@ -58,14 +61,15 @@ CARGO_TARGET_DIR=$parent_build build "$parent_dir"
 echo "ab: building change in $root" >&2
 build "$root"
 
-run_side() { # side seed
-  local dir=$root target=${CARGO_TARGET_DIR:-.bench_build}
+run_side() { # side seed [trace]
+  local dir=$root target=${CARGO_TARGET_DIR:-.bench_build} trace=${3:-0}
   if [ "$1" = parent ]; then dir=$parent_dir target=$parent_build; fi
   local log="$out/$1-seed$2.txt"
+  if [ "$trace" = 1 ]; then log="$out/$1-seed$2-traced.txt"; fi
   (cd "$dir" && CARGO_TARGET_DIR=$target python3 perfbench/run.py \
-    --workload "$workload" --seed "$2" --seconds "$seconds" --trace 0 >"$log" 2>"$log.err") \
-    || echo "ab: $1 seed $2 exited non-zero (see $log.err)" >&2
-  echo "ab: $1 seed $2: $(tail -n 1 "$log" | cut -c1-120)" >&2
+    --workload "$workload" --seed "$2" --seconds "$seconds" --trace "$trace" >"$log" 2>"$log.err") \
+    || echo "ab: $1 seed $2 (trace $trace) exited non-zero (see $log.err)" >&2
+  echo "ab: $1 seed $2 (trace $trace): $(tail -n 1 "$log" | cut -c1-120)" >&2
 }
 
 i=0
@@ -74,6 +78,7 @@ for s in "${seeds[@]}"; do
   for side in $order; do run_side "$side" "$s"; done
   i=$((i + 1))
 done
+for side in parent change; do run_side "$side" "${seeds[0]}" 1; done
 
 python3 - "$root/BENCHMARK.json" "$out" "$workload" "${seeds[@]}" <<'EOF'
 import json, statistics, sys
@@ -122,5 +127,19 @@ for m in metrics:
     print(f"{'':<18} median {'better' if better else 'worse'} by {gap:.2f} "
           f"({100 * (cq[1] - pq[1]) / pq[1]:+.1f}% of parent); parent IQR {iqr:.2f}; "
           f"gain rule {'holds' if rule else 'does not hold'}")
+
+traced = [result(f"{side}", f"{seeds[0]}-traced") for side in ("parent", "change")]
+print(f"\ntraced run, seed {seeds[0]}: per-layer job counts")
+if None in traced:
+    print("traced run missing on the " + " and ".join(
+        side for side, r in zip(("parent", "change"), traced) if r is None) + " side")
+else:
+    par, chg = (r["metrics"] for r in traced)
+    names = [n for n in par if n.endswith(".jobs")] + [n for n in chg if n.endswith(".jobs") and n not in par]
+    print(f"{'metric':<32} {'parent':>8} {'change':>8} {'delta':>8}")
+    for n in names:
+        p, c = par.get(n, {}).get("value"), chg.get(n, {}).get("value")
+        d = f"{c - p:+8g}" if p is not None and c is not None else f"{'':>8}"
+        print(f"{n:<32} {'-' if p is None else f'{p:g}':>8} {'-' if c is None else f'{c:g}':>8} {d}")
 EOF
 echo "ab: run outputs in $out" >&2

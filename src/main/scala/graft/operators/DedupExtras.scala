@@ -42,18 +42,26 @@ object DedupExtras {
     * regexp tokenizer PER ELEMENT REFERENCE (3 × shingles per doc), while
     * the three slices reference it a constant few times per row —
     * measured 8.8 s → 0.6 s for the q108 signature aggregate at sf0.1.
+    *
+    * The slice length is clamped at 0, so the shingle expression is total
+    * even on docs the `>= 3` filter drops: the optimizer may evaluate it
+    * ahead of that filter (an inferred `size(sh) > 0` from a downstream
+    * explode, folded over a local relation), and a negative slice length
+    * throws.
     */
-  private[operators] def shingleSetsOf(docs: DataFrame): DataFrame =
+  private[operators] def shingleSetsOf(docs: DataFrame): DataFrame = {
+    val n = greatest(size(col("toks")) - 2, lit(0))
     docs
       .select(col("doc_id"), TextPipeline.tokenArr(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), array_distinct(transform(
         arrays_zip(
-          slice(col("toks"), lit(1), size(col("toks")) - 2).as("w1"),
-          slice(col("toks"), lit(2), size(col("toks")) - 2).as("w2"),
-          slice(col("toks"), lit(3), size(col("toks")) - 2).as("w3")),
+          slice(col("toks"), lit(1), n).as("w1"),
+          slice(col("toks"), lit(2), n).as("w2"),
+          slice(col("toks"), lit(3), n).as("w3")),
         s => concat_ws(" ", s.getField("w1"), s.getField("w2"), s.getField("w3"))))
         .as("sh"))
+  }
 
   /** 8-way MinHash signature (doc_id, sig0..sig7) from a shingle-set frame.
     * 8 INDEPENDENT salted digests per shingle — md5(i || ':' || s) — one
@@ -203,51 +211,41 @@ object DedupExtras {
 
   /** CROSS-corpus MinHash near-dup matches: every (batch doc, store doc)
     * pair that shares an LSH band bucket AND verifies at exact shingle
-    * Jaccard ≥ `threshold`. The incremental-crawl shape (q80): the batch
-    * side is new-arrivals-scale, the store side is corpus-scale, and the
-    * band join is an ordinary equi-join on (band, bkey) — AQE broadcasts
-    * the batch band rows when the batch is small, which is exactly the
-    * incremental regime. At 100 TB the store's shingle sets and band rows
-    * are a maintained artifact (built once per snapshot, the q54 persisted-
-    * artifact pattern), not recomputed per batch; here both derive from
-    * the fixture inline. Returns (batch_id, store_id, jaccard),
-    * decision-scale, materialized for the same reason as
-    * [[minhashVerifiedPairsOf]].
-    */
-  def crossNearMatchesOf(batch: DataFrame, store: DataFrame,
-                         threshold: Double = JaccardThreshold): DataFrame = {
-    val shS = shingleSetsOf(store).cache()
-    try crossNearMatchesAgainst(batch, shS, bandRowsOf(signaturesOf(shS)), threshold)
-    finally shS.unpersist()
-  }
-
-  /** [[crossNearMatchesOf]] with the store side PRE-BUILT — (doc_id, sh)
-    * shingle sets and (doc_id, band, bkey) band rows, e.g. read back from
-    * the per-snapshot artifacts [[Incremental.buildStoreArtifacts]]
-    * persists. This is the production incremental path: nothing here
-    * rescans or re-tokenizes store text.
+    * Jaccard ≥ `threshold`, against a PRE-BUILT store side — (doc_id, sh)
+    * shingle sets and (doc_id, band, bkey) band rows, e.g. the per-snapshot
+    * artifacts [[Incremental.buildStoreArtifacts]] persists. The
+    * incremental-crawl shape (q80): the batch side is new-arrivals-scale,
+    * the store side is corpus-scale, and the band join is an ordinary
+    * equi-join on (band, bkey) — AQE broadcasts the batch band rows when
+    * the batch is small, which is exactly the incremental regime. Nothing
+    * here rescans or re-tokenizes store text.
+    *
+    * Lazy and cache-free: the batch shingle sets feed both the band rows
+    * and the verification join, so `batch` is shingled once for each.
+    * That is cheap for the batches measured — a stream's 180-doc
+    * micro-batch, a 900-doc artifact call — where a cache costs its own
+    * job and write; a caller whose batch is costly to derive materializes
+    * it first, as [[Incremental.incrementalDedupOf]] does. Returns
+    * (batch_id, store_id, jaccard), decision-scale.
     */
   def crossNearMatchesAgainst(batch: DataFrame, storeShingles: DataFrame,
                               storeBands: DataFrame,
                               threshold: Double = JaccardThreshold): DataFrame = {
-    val shB = shingleSetsOf(batch).cache()
-    try {
-      val bandB = bandRowsOf(signaturesOf(shB))
-        .select(col("doc_id").as("batch_id"), col("band"), col("bkey"))
-      val bandS = storeBands
-        .select(col("doc_id").as("store_id"), col("band"), col("bkey"))
-      val candidates = bandB.join(bandS, Seq("band", "bkey"))
-        .select(col("batch_id"), col("store_id"))
-        .distinct()
-      candidates
-        .join(shB.select(col("doc_id").as("batch_id"), col("sh").as("shb")), Seq("batch_id"))
-        .join(storeShingles.select(col("doc_id").as("store_id"), col("sh").as("shs")), Seq("store_id"))
-        .select(col("batch_id"), col("store_id"),
-          round(size(array_intersect(col("shb"), col("shs")))
-            / size(array_union(col("shb"), col("shs"))).cast("double"), 6).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true)
-    } finally shB.unpersist()
+    val shB = shingleSetsOf(batch)
+    val bandB = bandRowsOf(signaturesOf(shB))
+      .select(col("doc_id").as("batch_id"), col("band"), col("bkey"))
+    val bandS = storeBands
+      .select(col("doc_id").as("store_id"), col("band"), col("bkey"))
+    val candidates = bandB.join(bandS, Seq("band", "bkey"))
+      .select(col("batch_id"), col("store_id"))
+      .distinct()
+    candidates
+      .join(shB.select(col("doc_id").as("batch_id"), col("sh").as("shb")), Seq("batch_id"))
+      .join(storeShingles.select(col("doc_id").as("store_id"), col("sh").as("shs")), Seq("store_id"))
+      .select(col("batch_id"), col("store_id"),
+        round(size(array_intersect(col("shb"), col("shs")))
+          / size(array_union(col("shb"), col("shs"))).cast("double"), 6).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** The shared CTE prefix of the MinHash/LSH oracle — shingles through

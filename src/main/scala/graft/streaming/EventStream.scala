@@ -355,29 +355,38 @@ object EventStream {
 
   /** Per-batch incremental-dedup CLASSIFICATION against persisted store
     * artifacts — the continuous-curation loop's decision stage as a
-    * stream: every micro-batch runs
-    * [[graft.operators.Incremental.incrementalDedupAgainstArtifacts]]
-    * (exact md5 probe + MinHash/LSH band probe into the three
-    * [[graft.operators.Incremental.buildStoreArtifacts]] tables) and
-    * appends its (doc_id, disposition, matched_store_id) verdicts to
-    * `outDir`. The artifacts are FIXED for the stream's lifetime — the
-    * per-snapshot discipline the batch path documents: classification
-    * is per-doc independent, so ANY micro-batch split of a crawl yields
-    * the same verdict set, and the store text is never rescanned.
-    * Admission (appending survivors to the store) stays the separate
-    * concern [[fuzzyDedupAgainstStore]] owns; this writer is the
-    * read-only classifier a pipeline fans out to before deciding.
+    * stream. The three [[graft.operators.Incremental.buildStoreArtifacts]]
+    * tables are resolved ONCE, when the writer is created
+    * ([[graft.operators.Incremental.storeArtifacts]]); every micro-batch
+    * then appends the lazy [[graft.operators.Incremental.classify]] plan
+    * over that one store side — exact md5 probe + MinHash/LSH band probe —
+    * as its (doc_id, disposition, matched_store_id) verdicts to `outDir`,
+    * unsorted, in a single write query that caches and checkpoints
+    * nothing. Classification is per-doc independent, so ANY micro-batch
+    * split of a crawl yields the same verdict set, and the store text is
+    * never rescanned.
+    *
+    * CONTRACT: the artifacts are FIXED for the stream's lifetime — the
+    * per-snapshot discipline the batch path documents. The frames resolved
+    * at creation list the artifact files of that moment, so the artifacts
+    * must not be rebuilt while the stream runs; rebuild between streams
+    * and create a new writer. Admission (appending survivors to the store)
+    * stays the separate concern [[fuzzyDedupAgainstStore]] owns; this
+    * writer is the read-only classifier a pipeline fans out to before
+    * deciding.
     */
   def classifyAgainstStore(docs: DataFrame, artifactsDir: String, outDir: String,
-                           checkpointDir: String): DataStreamWriter[Row] =
+                           checkpointDir: String): DataStreamWriter[Row] = {
+    import graft.operators.Incremental
+    val store = Incremental.storeArtifacts(docs.sparkSession, artifactsDir)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Incremental.incrementalDedupAgainstArtifacts(batch, artifactsDir)
-          .write.mode("append").parquet(outDir)
+        Incremental.classify(batch, store).write.mode("append").parquet(outDir)
       }
+  }
 
   /** q181_stream_dedup_store — the STREAMING transport of q80's
     * incremental dedup, declared under q80's oracle VERBATIM (VERDICT
@@ -386,7 +395,7 @@ object EventStream {
     * batch ([[graft.operators.Incremental.batchOf]] — the same exact /
     * near / novel strata) as a TWO-file replay split on doc_id parity,
     * run it through the file source → [[classifyAgainstStore]] (one
-    * artifact-probing classification per micro-batch), and read the
+    * artifact-probing write query per micro-batch), and read the
     * appended verdicts back sorted. A green hash proves the
     * continuous-curation loop — the thing a pipeline team actually
     * schedules — lands row-identical to the batch classification: the
