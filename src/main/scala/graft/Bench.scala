@@ -120,7 +120,7 @@ object Bench {
         if (wantedSplit("q38_probe"))
           out += "q38_probe" -> medOf(force(IvfIndex.probe(spark, indexDir, q, k = 3, nprobe = 1)))
         if (wantedSplit("q48_probe"))
-          out += "q48_probe" -> medOf(force(IvfIndex.probeFiltered(spark, indexDir, qf, k = 3, nprobe = 1, pushLabelFilter = true)))
+          out += "q48_probe" -> medOf(force(IvfIndex.probeFiltered(spark, indexDir, qf, k = 3, nprobe = 1)))
         if (wantedSplit("q53_probe"))
           out += "q53_probe" -> medOf(force(IvfIndex.probe(spark, indexDir, q, k = 3, nprobe = 2)))
         if (wantedSplit("q55_graphbuild") || wantedSplit("q55_probe")) {
@@ -311,9 +311,9 @@ object Bench {
 
   /** True median: average the two middles on an even sample count
     * (upper-middle alone would bias a 2-sample run toward the worse run).
-    * ONE definition shared by the declared-query loop, the split index
-    * timing, and the measurement benches (CurationBoundaryBench), so all
-    * recorded medians stay methodologically identical (ADVICE r11).
+    * ONE definition shared by the declared-query loop and the split index
+    * timing, so all recorded medians stay methodologically identical
+    * (ADVICE r11).
     */
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted

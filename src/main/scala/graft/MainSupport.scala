@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the driver-contract and measurement mains (Verify,
-  * Bench, GenScale, GraphEntryBench, NearDupScaleBench): ONE definition of
-  * the local session bootstrap and the wall-clock helper, so a config
-  * change (shuffle partitions, UI flag, log level) cannot silently drift
-  * across entry points.
+/** Shared plumbing for the mains that start a local session (Verify,
+  * Bench, GenScale): ONE definition of the local session bootstrap and the
+  * wall-clock helper, so a config change (shuffle partitions, UI flag, log
+  * level) cannot silently drift across entry points.
   */
 object MainSupport {
 

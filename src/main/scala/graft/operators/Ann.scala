@@ -304,7 +304,8 @@ object Ann {
     * the embedding scan (no corpus shuffle) and scores queries×m pairs;
     * the final ranking is a window over query-scale rows (≤ queries×m).
     * Output schema matches q01, so recall-vs-exact is a direct row
-    * comparison (HammingRecallBench records it).
+    * comparison (BASELINE.md, "Binary-quantization recall audit", records
+    * it).
     */
   def hammingRerank(spark: SparkSession, sfDir: String): DataFrame = {
     GraftFunctions.ensureRegistered(spark)

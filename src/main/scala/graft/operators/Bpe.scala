@@ -114,7 +114,7 @@ object Bpe {
   private def sqlLit(s: String): String =
     "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  private[graft] def mergePairExpr(a: String, b: String): String = {
+  private def mergePairExpr(a: String, b: String): String = {
     val (qa, qb, qab) = (sqlLit(a), sqlLit(b), sqlLit(a + b))
     s"""aggregate(cs,
        |  named_struct('done', cast(array() as array<string>), 'pending', ''),
@@ -192,11 +192,11 @@ object Bpe {
 
   /** The crossover constant K, in merge-step equivalents: the type
     * path's per-token join + reassembly overhead costs about as much as
-    * K merge steps on that token. Fitted from the round-8 BpeEncodeBench
-    * study (sf1: scan ≈ 4.0 s + 0.057 s/depth, types ≈ 12.5 s flat ⇒
-    * crossover ≈ depth 150); the rule is deliberately coarse — the two
-    * paths are row-identical, so a mis-pick costs time, never
-    * correctness.
+    * K merge steps on that token. Fitted from the round-8 encode study
+    * (BASELINE.md, "Round 8: q86 BPE encode"; sf1: scan ≈ 4.0 s +
+    * 0.057 s/depth, types ≈ 12.5 s flat ⇒ crossover ≈ depth 150); the
+    * rule is deliberately coarse — the two paths are row-identical, so a
+    * mis-pick costs time, never correctness.
     */
   val AutoCrossoverK = 150.0
 
@@ -274,22 +274,19 @@ object Bpe {
     * reassemble per doc. Equal to [[bpeEncodeOf]] row-for-row
     * (spec-pinned). The trade vs the scan-local path: per-type encode
     * work (|types| × chain depth, not |instances| × depth) in exchange
-    * for the reassembly shuffle; `broadcastTypes=false` switches the
-    * stream join to shuffle-hash for type tables past broadcast size
-    * (the q78 knob).
+    * for the reassembly shuffle. The Heaps-bounded type table is
+    * broadcast into the positional token stream.
     */
   def bpeEncodeViaTypes(
       docs: DataFrame,
-      merges: Seq[(String, String)] = PinnedMerges,
-      broadcastTypes: Boolean = true): DataFrame = {
+      merges: Seq[(String, String)] = PinnedMerges): DataFrame = {
     val enc = graft.functions.BpeEncode.encodeCol(docs.sparkSession, merges) _
     val types = docs
       .select(explode(tokenArr(col("text"))).as("token")).distinct()
       .select(col("token"), enc(col("token")).as("pcs"))
-    val typesSide = if (broadcastTypes) broadcast(types) else types.hint("shuffle_hash")
     val assembled = docs
       .select(col("doc_id"), posexplode(tokenArr(col("text"))).as(Seq("pos", "token")))
-      .join(typesSide, Seq("token"))
+      .join(broadcast(types), Seq("token"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("pos"), col("pcs")))).as("sp"))
       .select(col("doc_id"),

@@ -313,10 +313,10 @@ object Cluster {
     * size while the declared q101-blocked row (k pinned at [[KmK]] for
     * the closed-form oracle) grows quadratically-in-block past the
     * fixture scale — measured exp 1.29 at sf1, the q56→q62 pattern
-    * repeated (SemdedupScaleBench). Redundancy semantics are
-    * [[semdedupOf]]'s, unchanged; only the blocking key differs. At
-    * b = 0 (n ≤ target) this IS the exact all-pairs SemDeDup — the
-    * spec's equivalence anchor.
+    * repeated (BASELINE.md, "Round 12: q102's scale boundary").
+    * Redundancy semantics are [[semdedupOf]]'s, unchanged; only the
+    * blocking key differs. At b = 0 (n ≤ target) this IS the exact
+    * all-pairs SemDeDup — the spec's equivalence anchor.
     */
   def semdedupScaledOf(emb: DataFrame, targetBlockRows: Int = SemDedupTargetBlockRows): DataFrame = {
     val (_, clusterExpr) = simhashCode(emb, targetBlockRows)
@@ -339,8 +339,9 @@ object Cluster {
     * over literal ±1 planes, so DuckDB recomputes every block boundary
     * exactly — which puts the TRUE 100 TB SemDeDup shape under the hard
     * hash signal, clearing q102's `weak` (q102 stays as the closed-form
-    * k-means oracle floor; SemdedupScaleBench carries the measured
-    * three-decade ladder, re-forked after the r14 de-skew).
+    * k-means oracle floor; BASELINE.md, "Round 14: q148 blocking
+    * re-keyed", carries the measured three-decade ladder, re-forked after
+    * the r14 de-skew).
     */
   def semdedupScaled(spark: SparkSession, sfDir: String): DataFrame =
     semdedupScaledOf(Tables.embeddings(spark, sfDir))

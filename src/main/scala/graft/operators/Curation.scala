@@ -34,9 +34,9 @@ import graft.Tables
   * the benchmark gram set; selection broadcasts per-lang cuts back to the
   * scan; packing windows within (lang, shard).
   *
-  * Boundary placement is MEASURED, not assumed (round-11 boundary study,
-  * CurationBoundaryBench → BASELINE.md): (a) the fuzzy stage's internal
-  * caches and the decon cache pay at every scale factor — without any
+  * Boundary placement is MEASURED, not assumed (BASELINE.md, "Round 11
+  * boundary study"): (a) the fuzzy stage's internal caches and the decon
+  * cache pay at every scale factor — without any
   * boundaries, the one-lazy-plan form recomputes the sentence machinery
   * per consumer (ReusedExchange covers only identical shuffle subtrees,
   * not their post-shuffle tails) and loses at BOTH sf0.1 (20.9 vs 9.5 s)
@@ -46,9 +46,9 @@ import graft.Tables
   * build/storage grows linearly while the recompute it avoids is one
   * scan-local clean pass over an exchange-reused shuffle. The declared
   * row therefore keeps the stage boundaries but NOT the survivors cache
-  * ([[curationCheckpointedOf]] with `cacheSurvivors = false`); at 100 TB
-  * each kept boundary is a parquet checkpoint write and the dropped one
-  * is exactly the frame a production run would NOT persist.
+  * ([[curationPipelineOf]]); at 100 TB each kept boundary is a parquet
+  * checkpoint write and the dropped one is exactly the frame a production
+  * run would NOT persist.
   */
 object Curation {
 
@@ -56,11 +56,27 @@ object Curation {
     curationPipelineOf(Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text")))
 
-  /** Composable end-to-end core for ANY (doc_id, lang, text) corpus — the
-    * measured-fastest boundary placement (see object scaladoc).
+  /** Composable end-to-end core for ANY (doc_id, lang, text) corpus, with
+    * the measured-fastest boundary placement (see object scaladoc): the
+    * decontaminated frame cached across its consumers and the final pack
+    * plan eagerly localCheckpoint'ed. Row-identical to [[curationPlanOf]]
+    * (spec-pinned).
     */
-  def curationPipelineOf(docs: DataFrame): DataFrame =
-    curationCheckpointedOf(docs, cacheSurvivors = false)
+  def curationPipelineOf(docs: DataFrame): DataFrame = {
+    // lang lookup against the RAW corpus, not the survivors frame
+    // (round 17): a survivor id is always an ORIGINAL doc_id — a
+    // planted copy (+1000000) can never be its text group's min-id
+    // keeper because its source carries the same text under a smaller
+    // id — and cleaning never touches lang, so the two joins are
+    // row-identical; the raw side is a bare scan while the survivors
+    // side re-ran the whole exact-dedup aggregate just to look up lang
+    val rebuilt = TextAnalysis.fuzzySentenceDedupOf(dedupedClean(docs))
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+      .select(col("doc_id"), col("lang"), col("cleaned").as("text"))
+    val decon = deconOf(docs, rebuilt).cache()
+    try selectAndPack(decon).localCheckpoint(true)
+    finally decon.unpersist()
+  }
 
   /** The whole chain as ONE lazy plan (no cache, no checkpoint) —
     * package-private so PlanShapeSpec pins the composition's REAL physical
@@ -76,36 +92,8 @@ object Curation {
     selectAndPack(deconOf(docs, rebuilt))
   }
 
-  /** The stage chain with explicit materialization boundaries: the
-    * decontaminated frame cached across its consumers, the final pack plan
-    * eagerly localCheckpoint'ed, and optionally (`cacheSurvivors`) the
-    * stage-2 survivors frame cached too — the round-10 shape, kept as the
-    * boundary study's measured arm and NOT the default (see object
-    * scaladoc). All forms are row-identical (spec-pinned).
-    */
-  def curationCheckpointedOf(docs: DataFrame,
-                             cacheSurvivors: Boolean = true): DataFrame = {
-    val survivors0 = dedupedClean(docs)
-    val survivors = if (cacheSurvivors) survivors0.cache() else survivors0
-    try {
-      // lang lookup against the RAW corpus, not the survivors frame
-      // (round 17): a survivor id is always an ORIGINAL doc_id — a
-      // planted copy (+1000000) can never be its text group's min-id
-      // keeper because its source carries the same text under a smaller
-      // id — and cleaning never touches lang, so the two joins are
-      // row-identical; the raw side is a bare scan while the survivors
-      // side re-ran the whole exact-dedup aggregate just to look up lang
-      val rebuilt = TextAnalysis.fuzzySentenceDedupOf(survivors)
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("cleaned").as("text"))
-      val decon = deconOf(docs, rebuilt).cache()
-      try selectAndPack(decon).localCheckpoint(true)
-      finally decon.unpersist()
-    } finally if (cacheSurvivors) survivors.unpersist()
-  }
-
   /** Stages 1-2: plant dirt + copies, clean, keep exact-dedup survivors. */
-  private[operators] def dedupedClean(docs: DataFrame): DataFrame = {
+  private def dedupedClean(docs: DataFrame): DataFrame = {
     // stage 1 — CLEAN (q85 core): plant deterministic dirt, normalize it
     val raw = docs.select(col("doc_id"), col("lang"),
       when(col("doc_id") % 3 === 0,
@@ -123,7 +111,7 @@ object Curation {
   /** Stage 4 — DECONTAMINATE (q60 core): drop rebuilt docs sharing any
     * 8-gram with the held-out benchmark slice, matched lowercased.
     */
-  private[operators] def deconOf(docs: DataFrame, rebuilt: DataFrame): DataFrame = {
+  private def deconOf(docs: DataFrame, rebuilt: DataFrame): DataFrame = {
     val bench = docs.filter(col("doc_id") % 97 === 0)
       .select(col("doc_id"), lower(col("text")).as("text"))
     val corpus = rebuilt.filter(col("doc_id") % 97 =!= 0)
@@ -136,7 +124,7 @@ object Curation {
   /** Stages 5-6: per-lang top-quartile LM selection (q79 core), then the
     * training-loader pack plan (q69 core).
     */
-  private[operators] def selectAndPack(decon: DataFrame): DataFrame = {
+  private def selectAndPack(decon: DataFrame): DataFrame = {
     val sel = TextAnalysis.percentileSelectOf(decon, TextAnalysis.SelectQuantile)
       .select(col("doc_id"))
     TextPipeline.packSequencesOf(decon.join(sel, Seq("doc_id"), "left_semi"))

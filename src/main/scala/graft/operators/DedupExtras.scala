@@ -49,7 +49,7 @@ object DedupExtras {
     * explode, folded over a local relation), and a negative slice length
     * throws.
     */
-  private[operators] def shingleSetsOf(docs: DataFrame): DataFrame = {
+  private[graft] def shingleSetsOf(docs: DataFrame): DataFrame = {
     val n = greatest(size(col("toks")) - 2, lit(0))
     docs
       .select(col("doc_id"), TextPipeline.tokenArr(col("text")).as("toks"))
@@ -598,11 +598,6 @@ object DedupExtras {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
-
-  /** q111's shingle frame for ANY corpus (the q16/q18 3-gram universe) —
-    * exposed so audits and plan pins reuse ONE definition of "shingle".
-    */
-  private[graft] def shinglesFor(docs: DataFrame): DataFrame = shingleSetsOf(docs)
 
   val q111OracleSql: String =
     s"""WITH sh AS (

@@ -106,7 +106,7 @@ object GraphAnn {
     * over exactly-widened floats, 0.0 on zero norm — so JVM-side search
     * scores equal the declared plans' scores to the last bit.
     */
-  private[operators] def cosine(a: Array[Float], b: Array[Float]): Double = {
+  private def cosine(a: Array[Float], b: Array[Float]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -128,7 +128,7 @@ object GraphAnn {
     * count (the sub-linearity evidence). Deterministic: candidate and
     * result orderings are total.
     */
-  private[operators] def beamSearch(
+  private def beamSearch(
       vecs: mutable.LongMap[Array[Float]],
       adj: Long => Array[Long],
       entry: Long, qvec: Array[Float], ef: Int): (Array[(Long, Double)], Int) = {

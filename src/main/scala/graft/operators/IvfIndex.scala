@@ -121,7 +121,9 @@ object IvfIndex {
     * nearest-centroid `list_id`. Idempotent (overwrite), like the
     * reference's create-if-absent collection DDL (vector_db.py:20-24).
     *
-    * `emb` must have (vec_id, label, embedding) — the fixture shape.
+    * `emb` must have (vec_id, label, embedding) — the fixture shape —
+    * with `vec_id` unique: [[latestPointsFor]]'s LWW skip and the
+    * agreement of [[withNearestList]]'s two paths both rest on it.
     */
   def build(spark: SparkSession, emb: DataFrame, indexDir: String): Unit = {
     GraftFunctions.ensureRegistered(spark)
@@ -205,7 +207,10 @@ object IvfIndex {
     * former broadcast-join shape instead (round 18): same
     * (cs desc, cl asc) argmax, so the two paths are row-identical
     * (property-pinned by IvfIndexSpec) — only the plan carrier of the
-    * centroid table differs (literal vs broadcast relation).
+    * centroid table differs (literal vs broadcast relation). That holds
+    * only for a `df` with unique `vec_id`s, the contract of every
+    * build/append batch: the fallback's groupBy(vec_id) keeps one row per
+    * id, the literal path keeps them all.
     */
   private[graft] def withNearestList(spark: SparkSession, df: DataFrame,
                                      indexDir: String,
@@ -556,11 +561,11 @@ object IvfIndex {
     *
     * Scan-pruning on BOTH dimensions: the routing decision contributes the
     * `list_id IN (...)` partition filter, and the query batch's distinct
-    * label set is pushed as a `label IN (...)` data filter into the parquet
-    * scan (the manual runtime-filter pattern — both IN-lists are
-    * driver-side literals bounded by nlist and |query labels|). The exact
-    * per-query label equality is then enforced in the join; the scan
-    * filter is a superset cut, the join predicate the precise one.
+    * label set is a `label IN (...)` cut (the manual runtime-filter
+    * pattern — both IN-lists are driver-side literals bounded by nlist and
+    * |query labels|). The exact per-query label equality is then enforced
+    * in the join; the label cut is a superset cut, the join predicate the
+    * precise one.
     *
     * `queries` must have (qid, qvec, qlabel). Returns
     * (qid, probe_list, vec_id, score, rank); a query whose probed list
@@ -568,8 +573,7 @@ object IvfIndex {
     * filtered vector search does when the filter empties the bucket.
     */
   def probeFiltered(spark: SparkSession, indexDir: String, queries: DataFrame,
-                    k: Int = 3, nprobe: Int = 1,
-                    pushLabelFilter: Boolean = false): DataFrame = {
+                    k: Int = 3, nprobe: Int = 1): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
     // ONE driver read of the query-scale routing decision yields both
     // IN-lists; the scoring join re-evaluates the routed projection inside
@@ -580,17 +584,14 @@ object IvfIndex {
     val qlabels = decision.map(_.get(1)).distinct.sortBy(_.toString).toSeq
     // ORDER MATTERS: last-writer-wins FIRST, label cut AFTER — filtering
     // versions by label before LWW would resurrect a superseded row whose
-    // OLD label matches the query. The scan-level label pushdown
-    // (`pushLabelFilter`) skips row groups before LWW and is therefore
-    // only sound when labels are stable across re-upserts OR the index is
-    // compacted — which is why it defaults OFF: the safe path is the
-    // default, and the fast path is an explicit opt-in (q48's freshly
-    // built index passes true). Partition pruning, the dominant cut, is
-    // kept either way.
+    // OLD label matches the query. On a build-only layout (catalog
+    // `nextVersion == 1`) [[latestPointsFor]] is the identity, so the
+    // optimizer pushes the cut into the scan as a data filter; on a
+    // versioned layout the window keeps it above LWW. Partition pruning,
+    // the dominant cut, is kept either way.
     val scanned = spark.read.parquet(pointsPath(indexDir))
       .filter(col("list_id").isin(lists: _*))
-    val pushed = if (pushLabelFilter) scanned.filter(col("label").isin(qlabels: _*)) else scanned
-    val points = latestPointsFor(spark, indexDir, pushed).filter(col("label").isin(qlabels: _*))
+    val points = latestPointsFor(spark, indexDir, scanned).filter(col("label").isin(qlabels: _*))
 
     val scored = points
       .join(broadcast(routed),
@@ -617,7 +618,8 @@ object IvfIndex {
     * ids supersede earlier rows: [[probe]] reads through [[latestPoints]],
     * a last-writer-wins view (the q03 upsert pattern), so a probe never
     * returns a stale duplicate. Appends touch only the affected list
-    * directories; nothing is rewritten.
+    * directories; nothing is rewritten. `vec_id` must be unique within
+    * one batch: its rows share one version, so LWW cannot order them.
     */
   def append(spark: SparkSession, newVectors: DataFrame, indexDir: String, version: Long): Unit = {
     // version 0 is the build's: an append stamped 0 (or below) would be
@@ -633,7 +635,7 @@ object IvfIndex {
     * `_meta.json` counter (and the counter bumped), so callers never thread
     * a version by hand and two sequential appends can never collide on the
     * same version. Requires a catalog entry — for a pre-catalog layout use
-    * the explicit-version overload.
+    * the explicit-version overload. Same unique-`vec_id` batch contract.
     */
   def append(spark: SparkSession, newVectors: DataFrame, indexDir: String): Unit = {
     val meta = readMeta(spark, indexDir).getOrElse(throw new IllegalStateException(
@@ -829,8 +831,7 @@ object IvfIndex {
     build(spark, emb, indexDir)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("label").as("qlabel"))
-    // freshly built, never appended: the scan-level label pushdown is sound
-    probeFiltered(spark, indexDir, queries, k = 3, nprobe = 1, pushLabelFilter = true)
+    probeFiltered(spark, indexDir, queries, k = 3, nprobe = 1)
   }
 
   /** q53_multiprobe_index — the probe's quality-vs-cost knob, declared:

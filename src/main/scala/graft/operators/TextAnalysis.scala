@@ -1319,22 +1319,19 @@ object TextAnalysis {
     * from the unigram table. With a pre-trained artifact — the
     * production case, q54's persisted-vocab pattern — the train
     * aggregates disappear and the table broadcast-joins straight into
-    * the bigram stream; a self-trained table past broadcast size shifts
-    * to a shuffle hash join on the (w1, w2) key, same dataflow. Docs
-    * with < 2 tokens carry no bigram evidence and are excluded (the q72
-    * zero-token convention, one level up).
+    * the bigram stream. Docs with < 2 tokens carry no bigram evidence and
+    * are excluded (the q72 zero-token convention, one level up).
     */
   def bigramLogProb(spark: SparkSession, sfDir: String): DataFrame =
     bigramLogProbOf(Tables.documents(spark, sfDir))
 
-  /** Composable core of q78 for ANY (doc_id, text, …) corpus.
-    * `broadcastLm=false` is the big-table escape hatch: the bigram table
-    * joins by shuffle hash on (w1, w2) instead of broadcasting —
-    * measured at sf10 in BASELINE.md, where GenScale's disjoint
-    * per-replica vocab grows bigram TYPES linearly (a real corpus
-    * follows Heaps' law and grows them much slower).
+  /** Composable core of q78 for ANY (doc_id, text, …) corpus. The bigram
+    * table is broadcast; BASELINE.md ("q78 LM-join knob measured") records
+    * it against a shuffle-hash join up to sf10, where GenScale's disjoint
+    * per-replica vocab grows bigram TYPES linearly (a real corpus follows
+    * Heaps' law and grows them much slower).
     */
-  def bigramLogProbOf(docs: DataFrame, broadcastLm: Boolean = true): DataFrame = {
+  def bigramLogProbOf(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), tokenArr(col("text")).as("toks"))
     // vocab size from the unigram type table — the smoothing denominator
     val vocab = toks.select(explode(col("toks")).as("token"))
@@ -1351,12 +1348,8 @@ object TextAnalysis {
     // corpus token stream is aggregated exactly once
     val contexts = bigramFreqs.groupBy(col("w1"))
       .agg(sum(col("c12")).cast("double").as("c1"))
-    val withLm =
-      if (broadcastLm) bigrams.join(broadcast(bigramFreqs), Seq("w1", "w2"))
-        .join(broadcast(contexts), Seq("w1"))
-      else bigrams.join(bigramFreqs.hint("shuffle_hash"), Seq("w1", "w2"))
-        .join(broadcast(contexts), Seq("w1"))
-    withLm
+    bigrams.join(broadcast(bigramFreqs), Seq("w1", "w2"))
+      .join(broadcast(contexts), Seq("w1"))
       .crossJoin(broadcast(vocab))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -1682,15 +1675,10 @@ object TextAnalysis {
     importanceSelectOf(Tables.documents(spark, sfDir), col("lang") === "en")
 
   /** Composable core for ANY (doc_id, lang, source, text, …) corpus and
-    * target-domain predicate.
-    *
-    * `broadcastLm=false` is the big-table escape hatch (q78's knob): the
-    * scored-vocab table is Heaps-bounded but a web-scale vocabulary can
-    * exceed the broadcast threshold — the flag routes the token-to-token
-    * join through the shuffle-hash path instead, row-identical output.
+    * target-domain predicate. The scored-vocab table is Heaps-bounded and
+    * broadcast into the token stream.
     */
-  def importanceSelectOf(docs: DataFrame, targetPred: Column,
-                         broadcastLm: Boolean = true): DataFrame = {
+  def importanceSelectOf(docs: DataFrame, targetPred: Column): DataFrame = {
     val terms = docs
       .select(col("doc_id"), explode(TextPipeline.tokenArr(col("text"))).as("token"))
     val fr = terms.groupBy(col("token")).agg(count(lit(1)).as("fr"))
@@ -1708,10 +1696,7 @@ object TextAnalysis {
       .select(col("token"),
         (log((coalesce(col("ft"), lit(0L)) + 1) / (col("tt") + col("v"))) -
          log((col("fr") + 1) / (col("tr") + col("v")))).as("s"))
-    val withLm =
-      if (broadcastLm) terms.join(broadcast(scored), Seq("token"))
-      else terms.join(scored.hint("shuffle_hash"), Seq("token"))
-    withLm
+    terms.join(broadcast(scored), Seq("token"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), round(avg(col("s")), 6).as("logratio"))
       .join(docs.select(col("doc_id"), col("lang"), col("source")), Seq("doc_id"))
@@ -2245,11 +2230,11 @@ object TextAnalysis {
   /** Lazy plan body of [[fuzzySentenceDedupOf]] — package-private so
     * PlanShapeSpec pins the REAL shape (the public API materializes
     * through a localCheckpoint, which would hide the plan behind an RDD
-    * scan).
+    * scan). Like the public path, it emits one row per DISTINCT doc_id.
     */
   private[graft] def fuzzySentenceDedupPlan(corpus: DataFrame, sents: DataFrame,
                                             minJaccard: Double): DataFrame =
-    fuzzyTail(corpus.select(col("doc_id")), sents, exactSurvivors(sents), minJaccard)
+    fuzzyTail(corpus.select(col("doc_id")).distinct(), sents, exactSurvivors(sents), minJaccard)
 
   private def fuzzyTail(corpusIds: DataFrame, sents: DataFrame, exact: DataFrame,
                         minJaccard: Double): DataFrame = {

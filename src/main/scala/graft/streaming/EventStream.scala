@@ -90,7 +90,11 @@ object EventStream {
   /** Run `f` with `spark.sql.shuffle.partitions` set to `n`, restoring the
     * session value after — the conf is consumed by the streaming query at
     * START (and pinned in its checkpoint), so the override never leaks
-    * into any other query. Scoped, not session config.
+    * into any other query. Scoped, not session config — provided only
+    * one query runs on the session at a time: while `f` runs the value
+    * is session-global, so a query started concurrently on the same
+    * session would pick up `n`, and two overlapping calls could restore
+    * each other's value.
     */
   private def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession,
                                        n: Int)(f: => T): T = {

@@ -136,16 +136,14 @@ class BpeSpec extends AnyFunSuite {
     assert(got == ref, s"\nengine: $got\nref:    $ref\ntexts: $texts")
   }
 
-  test("bpeEncodeViaTypes equals the scan-local path, both join strategies") {
+  test("bpeEncodeViaTypes equals the scan-local path") {
     import spark.implicits._
     val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
       .select(col("doc_id"), col("text"))
     val base = Bpe.bpeEncodeOf(docs).as[(Long, Long, Long, String)].collect().sortBy(_._1).toList
-    for (bc <- Seq(true, false)) {
-      val via = Bpe.bpeEncodeViaTypes(docs, Bpe.PinnedMerges, broadcastTypes = bc)
-        .as[(Long, Long, Long, String)].collect().sortBy(_._1).toList
-      assert(via == base, s"broadcastTypes=$bc diverged from scan-local")
-    }
+    val via = Bpe.bpeEncodeViaTypes(docs, Bpe.PinnedMerges)
+      .as[(Long, Long, Long, String)].collect().sortBy(_._1).toList
+    assert(via == base, "the type-factorized encode diverged from scan-local")
   }
 
   test("the pinned merge table IS bpeTrainOf's output on the sf0.01 fixture") {

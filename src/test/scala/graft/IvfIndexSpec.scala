@@ -85,10 +85,31 @@ class IvfIndexSpec extends AnyFunSuite {
     val nlist = emb.select("label").distinct().count().toInt
     val q = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("label").as("qlabel"))
-    val r = IvfIndex.probeFiltered(spark, dir, q, k = 5, nprobe = nlist, pushLabelFilter = false)
-      .select($"vec_id").as[Long].collect()
+    val probe = IvfIndex.probeFiltered(spark, dir, q, k = 5, nprobe = nlist)
+    assert(pointsScanFilters(probe, dir).forall(!_.references.exists(_.name == "label")),
+      "on an appended index the label cut must stay above the LWW window, not in the scan")
+    val r = probe.select($"vec_id").as[Long].collect()
     assert(!r.contains(0L),
       "a row whose latest version carries a different label must not match the old label")
+  }
+
+  /** Data filters of the points-table scan inside `df`'s physical plan. */
+  private def pointsScanFilters(df: org.apache.spark.sql.DataFrame, dir: String) = {
+    val scans = df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(IvfIndex.pointsPath(dir))) => s
+    }
+    assert(scans.size == 1, s"expected one points scan, found ${scans.size}")
+    scans.head.dataFilters
+  }
+
+  test("filtered probe pushes the label cut into the scan of a build-only index") {
+    // the suite's index is never appended, so its catalog reads nextVersion == 1
+    val queries = Tables.embeddings(spark, TestSpark.Sf0001).filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("label").as("qlabel"))
+    val filters = pointsScanFilters(IvfIndex.probeFiltered(spark, indexDir, queries), indexDir)
+    assert(filters.exists(_.references.exists(_.name == "label")),
+      s"the label cut must be a data filter of the points scan; got $filters")
   }
 
   test("probe over the persisted index equals the index-free computation") {

@@ -547,7 +547,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q111 containment: bounded inverted index — no cartesian, no self-join fanout") {
     val docs = graft.Tables.documents(spark, TestSpark.Sf0001)
     val p = plan(graft.operators.DedupExtras.containmentPairsOf(
-      graft.operators.DedupExtras.shinglesFor(docs)))
+      graft.operators.DedupExtras.shingleSetsOf(docs)))
     assert(!p.contains("Join"),
       s"pairs must explode from the bounded sets — never a shingle self-join;\n$p")
     assert(p.contains("ObjectHashAggregate"),

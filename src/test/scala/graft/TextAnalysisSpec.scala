@@ -253,16 +253,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(expected(1L)._2 == 175 && expected(3L)._2 == 80)
   }
 
-  test("q94 shuffle-join LM variant equals the broadcast plan row-for-row") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, TestSpark.Sf0001)
-    val bc = TextAnalysis.importanceSelectOf(docs, col("lang") === "en")
-      .as[(Long, String, String, Long, Double)].collect().toSet
-    val sh = TextAnalysis.importanceSelectOf(docs, col("lang") === "en", broadcastLm = false)
-      .as[(Long, String, String, Long, Double)].collect().toSet
-    assert(bc.nonEmpty && bc == sh, s"${bc.size} broadcast rows vs ${sh.size} shuffle rows")
-  }
-
   test("importance selection keeps target-like docs and rejects off-target vocabulary") {
     import spark.implicits._
     // target = en docs. Docs 1-4 (en) and doc 5 (fr) are built from the
@@ -357,15 +347,6 @@ class TextAnalysisSpec extends AnyFunSuite {
       assert(n == en, s"doc $id bigram count $n != $en")
       assert(math.abs(s - es) < 1.5e-6, s"doc $id score $s != $es")
     }
-  }
-
-  test("q78 shuffle-join LM variant equals the broadcast plan row-for-row") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, TestSpark.Sf0001)
-    val bc = TextAnalysis.bigramLogProbOf(docs).as[(Long, Long, Double)].collect().toSet
-    val sh = TextAnalysis.bigramLogProbOf(docs, broadcastLm = false)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(bc == sh, s"${bc.size} broadcast rows vs ${sh.size} shuffle rows")
   }
 
   test("bigram LM penalizes scrambled word order where the unigram LM cannot see it") {
