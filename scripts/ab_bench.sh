@@ -14,9 +14,12 @@
 # pair-win count (ties count for neither side), and whether the gain rule
 # holds: at least 10 pairs, wins on >= 9/10 of them, and a median gap larger
 # than the parent's interquartile range. After the pairs it runs one traced
-# run per side on the first seed and prints every per-layer `*.jobs` metric
-# side by side: job counts repeat exactly per seed, so they show where a
-# wall-time difference comes from. It reads the benchmark and never edits it.
+# run per side on the first seed and prints, per layer, its `jobs`,
+# `wall_s`, `call_s` and `gap_s` metrics side by side: job counts repeat
+# exactly per seed, and the three times split a layer's wall time into the
+# call before its lazy result returns and the driver gap between its jobs,
+# so together they show where a wall-time difference sits. It reads the
+# benchmark and never edits it.
 #
 # Environment:
 #   AB_SECONDS     run length passed to run.py (default: BENCHMARK.json run_seconds)
@@ -129,17 +132,22 @@ for m in metrics:
           f"gain rule {'holds' if rule else 'does not hold'}")
 
 traced = [result(f"{side}", f"{seeds[0]}-traced") for side in ("parent", "change")]
-print(f"\ntraced run, seed {seeds[0]}: per-layer job counts")
+print(f"\ntraced run, seed {seeds[0]}: per-layer jobs and seconds, parent / change")
 if None in traced:
     print("traced run missing on the " + " and ".join(
         side for side, r in zip(("parent", "change"), traced) if r is None) + " side")
 else:
     par, chg = (r["metrics"] for r in traced)
-    names = [n for n in par if n.endswith(".jobs")] + [n for n in chg if n.endswith(".jobs") and n not in par]
-    print(f"{'metric':<32} {'parent':>8} {'change':>8} {'delta':>8}")
-    for n in names:
-        p, c = par.get(n, {}).get("value"), chg.get(n, {}).get("value")
-        d = f"{c - p:+8g}" if p is not None and c is not None else f"{'':>8}"
-        print(f"{n:<32} {'-' if p is None else f'{p:g}':>8} {'-' if c is None else f'{c:g}':>8} {d}")
+    ops = [n[:-5] for n in par if n.endswith(".jobs")]
+    ops += [n[:-5] for n in chg if n.endswith(".jobs") and n[:-5] not in ops]
+    fields = ("jobs", "wall_s", "call_s", "gap_s")
+
+    def cell(side, op, field):
+        v = side.get(f"{op}.{field}", {}).get("value")
+        return "-" if v is None else f"{v:g}" if field == "jobs" else f"{v:.3f}"
+
+    print(f"{'layer':<24}" + "".join(f" {f:>15}" for f in fields))
+    for op in ops:
+        print(f"{op:<24}" + "".join(f" {cell(par, op, f) + ' / ' + cell(chg, op, f):>15}" for f in fields))
 EOF
 echo "ab: run outputs in $out" >&2

@@ -262,8 +262,9 @@ object GraphAnn {
     * from every result. Both mismatch directions fail; graph files
     * without metadata (a crashed buildGraphs) fail too, not fall through.
     */
-  private def requireFreshGraph(spark: SparkSession, indexDir: String): Unit =
-    (readGraphMeta(spark, indexDir), IvfIndex.readMeta(spark, indexDir)) match {
+  private def requireFreshGraph(spark: SparkSession, indexDir: String,
+                                catalog: Option[IvfIndex.IndexMeta]): Unit =
+    (readGraphMeta(spark, indexDir), catalog) match {
       case (Some(g), Some(meta)) =>
         require(g.builtForBuild == meta.buildId && g.builtAtVersion == meta.nextVersion,
           s"graph index at ${graphPath(indexDir)} is stale (built for build ${g.builtForBuild} " +
@@ -280,7 +281,8 @@ object GraphAnn {
     * lists (the SAME routing as [[IvfIndex.probe]] — one implementation,
     * identical tie-breaks), read ONLY the probed lists' graph partitions,
     * beam-search each query inside each routed list, then rank the
-    * candidates with the probe's own bounded-heap top-k + final window.
+    * candidates with the probes' shared one-aggregate tail
+    * ([[IvfIndex.rankTopK]]).
     * Output schema == [[IvfIndex.probe]]: (qid, probe_list, vec_id,
     * score, rank). This is the INTERACTIVE path: the routed query batch
     * (qid + vectors, a projection over the queries) is collected once and
@@ -299,11 +301,13 @@ object GraphAnn {
     GraftFunctions.ensureRegistered(spark)
     implicit val encG = Encoders.product[GraphRow]
     implicit val encH = Encoders.product[Hit]
-    requireFreshGraph(spark, indexDir)
-    val routed = IvfIndex.route(spark, indexDir, queries, nprobe)
+    val h = IvfIndex.open(spark, indexDir)
+    requireFreshGraph(spark, indexDir, h.meta)
+    val routed = IvfIndex.routeOf(spark, h, queries, nprobe)
     // query batch to the driver — |queries| × nprobe rows, the same
-    // query-scale routing decision every probe variant collects; the
-    // probed-list IN-list falls out of the same collect
+    // query-scale routing decision every probe variant collects (routeOf
+    // already holds it as a local relation, so this read runs no job);
+    // the probed-list IN-list falls out of the same collect
     val qByList: Map[Long, Array[(Long, Array[Float])]] = routed
       .select(col("probe_list"), col("qid"), col("qvec"))
       .collect()
@@ -317,7 +321,7 @@ object GraphAnn {
     // largest single list), instead of a repartition(list_id) whose hash
     // partitioning would co-locate many lists into one whole-partition
     // toArray
-    val hits = spark.read.parquet(graphPath(indexDir))
+    val hits = h.graph(spark)
       .filter(col("list_id").isin(lists: _*)) // partition-pruned scan
       .select(col("vec_id"), col("embedding"), col("neighbors"), col("list_id"))
       .as[GraphRow]
@@ -374,13 +378,14 @@ object GraphAnn {
     implicit val encR = Encoders.product[RoutedQuery]
     implicit val encH = Encoders.product[Hit]
     implicit val encK = Encoders.scalaLong
-    requireFreshGraph(spark, indexDir)
-    val routed = IvfIndex.route(spark, indexDir, queries, nprobe).localCheckpoint(true)
+    val h = IvfIndex.open(spark, indexDir)
+    requireFreshGraph(spark, indexDir, h.meta)
+    val routed = IvfIndex.routeInScan(spark, h, queries, nprobe).localCheckpoint(true)
     // list-scale (<= nlist) — the partition-pruning IN-list, NOT the queries
     val lists = routed.select(col("probe_list")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
 
-    val graphRows = spark.read.parquet(graphPath(indexDir))
+    val graphRows = h.graph(spark)
       .filter(col("list_id").isin(lists: _*)) // partition-pruned scan
       .select(col("vec_id"), col("embedding"), col("neighbors"), col("list_id"))
       .as[GraphRow]

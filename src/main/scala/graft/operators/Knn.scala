@@ -54,24 +54,18 @@ object Knn {
   /** SQL name of the k=5 bounded-heap top-k aggregate (q01's SQL route). */
   val TopK5Name = "graft_topk5"
 
-  /** Idempotently register the top-k UDAF for the SQL surface (the
-    * GraftFunctions.registerIfAbsent discipline — re-registering per call
-    * would log a `replaced` warning per query).
+  /** Idempotently register the top-k UDAF for the SQL surface
+    * ([[TopK.registeredOnce]]).
     */
   def ensureTopk5(spark: SparkSession): Unit = { ensureTopk(spark, 5); () }
 
   /** Generalized registration: `graft_topk<k>` — one registry entry per
     * distinct k (the name carries the bound, since a UDAF closes over
-    * it). Returns the registered name; shared by the q01 route (k=5) and
-    * the index-probe SQL route (q184, k=3).
+    * it). Returns the registered name; the q01 route uses k=5 (the
+    * index-probe SQL route ranks with [[TopK.ensureRankedTopK]]).
     */
-  def ensureTopk(spark: SparkSession, k: Int): String = {
-    val name = s"graft_topk$k"
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      spark.udf.register(name, TopK.topKUdaf(k))
-    name
-  }
+  def ensureTopk(spark: SparkSession, k: Int): String =
+    TopK.registeredOnce(spark, s"graft_topk$k", TopK.topKUdaf(k))
 
   /** q01's full SQL text over the `graft_q01_embeddings` view: the same
     * plan the DataFrame core declares — broadcast-hinted query side into

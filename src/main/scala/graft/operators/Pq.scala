@@ -278,16 +278,17 @@ object Pq {
       .write.mode("overwrite").partitionBy("list_id").parquet(codesPath(indexDir))
   }
 
-  /** IVFPQ probe: route each query ([[IvfIndex.route]]), ADC-scan ONLY the
-    * probed lists' code partitions, shortlist per query, exact cosine
-    * rerank against the float points of those same pruned lists. With a
-    * shortlist covering the probed lists entirely, this equals
-    * [[IvfIndex.probe]] exactly (property-tested) — the compression is
-    * then free; smaller shortlists trade recall for a rerank bounded by
-    * |queries|·shortlist float reads. The routed frame is a projection
-    * over the queries, so it is read once on the driver (IN-list, probe
-    * sets, ADC tables) and re-evaluated inside the rerank broadcast — no
-    * checkpoint.
+  /** IVFPQ probe: open the index ([[IvfIndex.open]]), route each query
+    * ([[IvfIndex.route]]), ADC-scan ONLY the probed lists' code partitions,
+    * shortlist per query, exact cosine rerank against the float points of
+    * those same pruned lists; both layouts are read through the handle's
+    * cached schemas. With a shortlist covering the probed lists entirely,
+    * this equals [[IvfIndex.probe]] exactly (property-tested) — the
+    * compression is then free; smaller shortlists trade recall for a
+    * rerank bounded by |queries|·shortlist float reads. Routing runs on
+    * the driver ([[IvfIndex.routeOf]]); its local relation is read once
+    * (IN-list, probe sets, ADC tables; no job) and broadcast to the rerank
+    * — no checkpoint.
     */
   def probeCompressed(spark: SparkSession, indexDir: String, cb: Codebooks,
                       queries: DataFrame, k: Int = 3, nprobe: Int = 1,
@@ -298,7 +299,8 @@ object Pq {
 
     // ONE driver read of the query-scale routing decision: the probed
     // IN-list, each query's own probed-list set and its ADC table
-    val routed = IvfIndex.route(spark, indexDir, queries, nprobe)
+    val h = IvfIndex.open(spark, indexDir)
+    val routed = IvfIndex.routeOf(spark, h, queries, nprobe)
     val decision = routed
       .select(col("qid"), col("probe_list"), normalize(toDouble(col("qvec"))).as("u"))
       .as[(Long, Long, Seq[Double])].collect()
@@ -311,7 +313,7 @@ object Pq {
 
     // partition-pruned ADC scan: each code row scores only against queries
     // that probed ITS list
-    val codes = spark.read.parquet(codesPath(indexDir))
+    val codes = h.codes(spark)
       .filter(col("list_id").isin(lists: _*))
       .select(col("vec_id"), col("list_id"), col("codes"))
       .as[ListCodes]
@@ -333,8 +335,7 @@ object Pq {
 
     // exact rerank reads floats only from the pruned lists, only for the
     // shortlist
-    val points = IvfIndex.latestPointsFor(spark, indexDir,
-      spark.read.parquet(IvfIndex.pointsPath(indexDir)).filter(col("list_id").isin(lists: _*)))
+    val points = h.latest(h.points(spark).filter(col("list_id").isin(lists: _*)))
     val qside = routed.select(col("qid").as("r_qid"), col("qvec"), col("probe_list")).distinct()
     val reranked = candidates
       .join(points.select(col("vec_id"), col("embedding"), col("list_id")), Seq("vec_id"))

@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression, Expression, IsNotNull}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,23 +38,28 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("list_id=")))
   }
 
+  private lazy val firstTen = Tables.embeddings(spark, TestSpark.Sf0001).filter(col("vec_id") < 10)
+
   test("probe scan is partition-pruned to the probed lists") {
-    val q = IvfIndex.prunedPointsScan(spark, indexDir, Seq(3L))
-    val plan = q.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*list_id""".r.findFirstIn(plan).isDefined,
-      "list_id must appear INSIDE a non-empty partition filter (the key prints even when empty)")
-    val leaves = q.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(!leaves.contains("list_id=1") || leaves.contains("list_id=3"))
+    val queries = firstTen.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val probe = IvfIndex.probe(spark, indexDir, queries, k = 3, nprobe = 1)
+    val scan = pointsScan(probe, indexDir)
+    assert(staticFilterOn(scan.partitionFilters, "list_id"),
+      s"list_id must be a static partition filter of the probe's points scan; got ${scan.partitionFilters}")
+    val routedLists = IvfIndex.route(spark, indexDir, queries, nprobe = 1)
+      .select("probe_list").distinct().count()
+    assert(scan.metrics("numPartitions").value == routedLists,
+      "the scan must read exactly the routed list partitions")
   }
 
   test("filtered probe scan prunes on BOTH list partitions and pushed label filter") {
-    val q = IvfIndex.filteredPointsScan(spark, indexDir, Seq(3L), Seq(3, 4))
-    val plan = q.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*list_id""".r.findFirstIn(plan).isDefined,
-      "list_id must prune partitions (inside a non-empty filter bracket)")
-    // (a 1-element IN folds to EqualTo — still pushed; assert the 2-element form)
-    assert(plan.contains("PushedFilters") && plan.contains("In(label"),
-      s"label IN (...) must be pushed into the parquet scan; got:\n$plan")
+    val queries = firstTen
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("label").as("qlabel"))
+    val scan = pointsScan(IvfIndex.probeFiltered(spark, indexDir, queries, k = 3, nprobe = 2), indexDir)
+    assert(staticFilterOn(scan.partitionFilters, "list_id"),
+      s"list_id must prune partitions; got ${scan.partitionFilters}")
+    assert(staticFilterOn(scan.dataFilters, "label") && scan.metadata.get("PushedFilters").exists(_.contains("label")),
+      s"the label cut must be pushed into the parquet reader; got ${scan.dataFilters}")
   }
 
   test("filtered probe returns only same-label candidates, ranked like q02 over the probed list") {
@@ -86,29 +97,43 @@ class IvfIndexSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("label").as("qlabel"))
     val probe = IvfIndex.probeFiltered(spark, dir, q, k = 5, nprobe = nlist)
-    assert(pointsScanFilters(probe, dir).forall(!_.references.exists(_.name == "label")),
+    assert(pointsScan(probe, dir).dataFilters.forall(!_.references.exists(_.name == "label")),
       "on an appended index the label cut must stay above the LWW window, not in the scan")
     val r = probe.select($"vec_id").as[Long].collect()
     assert(!r.contains(0L),
       "a row whose latest version carries a different label must not match the old label")
   }
 
-  /** Data filters of the points-table scan inside `df`'s physical plan. */
-  private def pointsScanFilters(df: org.apache.spark.sql.DataFrame, dir: String) = {
-    val scans = df.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
+  /** The points-table scan of `df`'s executed plan: `df` runs first, so
+    * this is the scan adaptive execution really ran, found structurally.
+    */
+  private def pointsScan(df: DataFrame, dir: String): FileSourceScanExec = {
+    df.collect()
+    val scans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.toString.contains(IvfIndex.pointsPath(dir))) => s
     }
     assert(scans.size == 1, s"expected one points scan, found ${scans.size}")
-    scans.head.dataFilters
+    scans.head
   }
+
+  /** A cut on column `c` that is known when the query is planned — for
+    * the checks that a cut IS there. Neither the `isnotnull` the optimizer
+    * infers from a join key nor a dynamic partition-pruning filter counts:
+    * both appear without the probe's own IN-list.
+    */
+  private def staticFilterOn(filters: Seq[Expression], c: String): Boolean =
+    filters.exists {
+      case _: DynamicPruningExpression | _: IsNotNull => false
+      case f => f.references.exists(_.name == c)
+    }
 
   test("filtered probe pushes the label cut into the scan of a build-only index") {
     // the suite's index is never appended, so its catalog reads nextVersion == 1
-    val queries = Tables.embeddings(spark, TestSpark.Sf0001).filter(col("vec_id") < 10)
+    val queries = firstTen
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("label").as("qlabel"))
-    val filters = pointsScanFilters(IvfIndex.probeFiltered(spark, indexDir, queries), indexDir)
-    assert(filters.exists(_.references.exists(_.name == "label")),
+    val filters = pointsScan(IvfIndex.probeFiltered(spark, indexDir, queries), indexDir).dataFilters
+    assert(staticFilterOn(filters, "label"),
       s"the label cut must be a data filter of the points scan; got $filters")
   }
 
@@ -198,38 +223,55 @@ class IvfIndexSpec extends AnyFunSuite {
       Seq(o, o.map(-_))
     }
     val qs = Seq.fill(40)(draw()) ++ Seq(cents(7L), Seq.fill(dim)(0.0)) ++ orth
-    val queries = qs.zipWithIndex.map { case (v, i) => (i.toLong, v, s"t$i") }.toDF("qid", "qvec", "tag")
-    def routed(np: Int, bound: Long) =
-      IvfIndex.routeWith(spark, dir, queries, np, carry = Seq("tag"), keepRank = true, bound)
-    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    val doubles = qs.zipWithIndex.map { case (v, i) => (i.toLong, v, s"t$i") }.toDF("qid", "qvec", "tag")
+    def rowsOf(df: DataFrame) =
       df.select("qid", "probe_list", "route_rank", "tag").orderBy("qid", "route_rank")
         .collect().map(_.toSeq).toSeq
-    for (np <- Seq(1, 2, 4, nlist + 3)) {
-      val lit_ = routed(np, IvfIndex.CentroidLiteralBound)
-      val bcast = routed(np, 0L)
-      assert(lit_.columns.toSeq == Seq("qid", "qvec", "tag", "route_rank", "probe_list") &&
-        lit_.columns.toSeq == bcast.columns.toSeq)
-      val (l, b) = (rowsOf(lit_), rowsOf(bcast))
-      assert(l.size == qs.size * math.min(np, nlist) && l == b,
-        s"nprobe=$np: literal and broadcast-join routing must be row-identical " +
-          "(same (score desc, list id asc) order)")
-      // the literal route is a projection: no join, window or exchange
-      val plan = lit_.queryExecution.executedPlan.toString
-      assert(!plan.contains("Join") && !plan.contains("Window") && !plan.contains("Exchange"),
-        s"the literal route must be scan-local;\n$plan")
+    // three carriers of the one routing rule: the probes' driver route
+    // (over a local and a file-read query frame), route's scan-local
+    // projection (over the file-read frame), and bound 0, which forces the
+    // broadcast join
+    for (queries <- Seq(doubles, doubles.withColumn("qvec", col("qvec").cast("array<float>")))) {
+      val kind = queries.schema("qvec").dataType.catalogString
+      val stored = java.nio.file.Files.createTempDirectory("graft_ivf_queries").toString + "/q"
+      queries.write.parquet(stored)
+      val scanned = spark.read.parquet(stored)
+      def routed(q: DataFrame, np: Int, bound: Long) =
+        IvfIndex.routeWith(spark, dir, q, np, carry = Seq("tag"), keepRank = true, bound)
+      def onDriverOf(q: DataFrame, np: Int) =
+        IvfIndex.routeOf(spark, IvfIndex.open(spark, dir), q, np, carry = Seq("tag"), keepRank = true)
+      for (np <- Seq(1, 2, 4, nlist + 3)) {
+        val onDriver = onDriverOf(queries, np)
+        val scanLocal = routed(scanned, np, IvfIndex.CentroidLiteralBound)
+        val bcast = routed(queries, np, 0L)
+        assert(onDriver.columns.toSeq == Seq("qid", "qvec", "tag", "route_rank", "probe_list") &&
+          scanLocal.columns.toSeq == onDriver.columns.toSeq && bcast.columns.toSeq == onDriver.columns.toSeq)
+        assert(onDriver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+          s"$kind, nprobe=$np: the driver route must return a local relation")
+        // the scan-local route is a projection: no join, window or exchange
+        val plan = scanLocal.queryExecution.executedPlan.toString
+        assert(!plan.contains("LocalTableScan") && !plan.contains("Join") && !plan.contains("Window") &&
+          !plan.contains("Exchange"), s"$kind, nprobe=$np: the literal route must be scan-local;\n$plan")
+        assert("graft_cosine".r.findAllMatchIn(plan).size == 1,
+          s"$kind, nprobe=$np: the scan-local route must score each query once, in one projection;\n$plan")
+        val (d, l, b) = (rowsOf(onDriver), rowsOf(scanLocal), rowsOf(bcast))
+        assert(d.size == qs.size * math.min(np, nlist) && d == l && d == b &&
+          rowsOf(onDriverOf(scanned, np)) == d,
+          s"$kind, nprobe=$np: driver, scan-local and broadcast-join routing must be row-identical " +
+            "(same (score desc, list id asc) order)")
+      }
+      // the planted ties break toward the smaller list id
+      def listsOf(qid: Long, np: Int) =
+        routed(queries.filter(col("qid") === qid), np, IvfIndex.CentroidLiteralBound)
+          .orderBy("route_rank").select("probe_list").as[Long].collect().toSeq
+      assert(listsOf(40L, 2) == Seq(7L, 8L) && listsOf(41L, 3) == Seq(0L, 1L, 2L), kind)
     }
-    // the planted ties break toward the smaller list id in both paths
-    val twinQ = routed(2, IvfIndex.CentroidLiteralBound).filter(col("qid") === 40L)
-      .orderBy("route_rank").select("probe_list").as[Long].collect().toSeq
-    assert(twinQ == Seq(7L, 8L))
-    val zeroQ = routed(3, IvfIndex.CentroidLiteralBound).filter(col("qid") === 41L)
-      .orderBy("route_rank").select("probe_list").as[Long].collect().toSeq
-    assert(zeroQ == Seq(0L, 1L, 2L))
     // a pre-catalog layout routes through the broadcast join, same rows
+    val catalogued = rowsOf(IvfIndex.route(spark, dir, doubles, nprobe = 2, carry = Seq("tag"), keepRank = true))
     new java.io.File(IvfIndex.metaPath(dir)).delete()
-    val preCatalog = IvfIndex.route(spark, dir, queries, nprobe = 2, carry = Seq("tag"), keepRank = true)
+    val preCatalog = IvfIndex.route(spark, dir, doubles, nprobe = 2, carry = Seq("tag"), keepRank = true)
     assert(preCatalog.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-    assert(rowsOf(preCatalog) == rowsOf(routed(2, IvfIndex.CentroidLiteralBound)))
+    assert(rowsOf(preCatalog) == catalogued)
   }
 
   /** Spark jobs `body` starts, counted by a listener over a span-scoped
@@ -262,15 +304,25 @@ class IvfIndexSpec extends AnyFunSuite {
     // count, a checkpoint, a DISTINCT shuffle) changes the count and
     // fails here. The counts cover the driver-side actions inside each
     // call plus, for the probe, the jobs of collecting its result.
+    //  - cold: the first probe of a build also resolves the handle (the
+    //    centroid literal, the points schema);
+    //  - warm: a later probe of the same build through the cached handle,
+    //    with a query frame read from files (collecting the routed lists
+    //    to the driver is one job);
+    //  - serving: the same queries as a local relation, whose routing
+    //    projection folds on the driver — one lazy query over the pruned
+    //    scan.
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_jobpin").toString
     IvfIndex.build(spark, emb, dir)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val probeJobs = jobsOf(IvfIndex.probe(spark, dir, queries, k = 3, nprobe = 1).collect())
+    val local = spark.createDataFrame(queries.collect().toSeq.asJava, queries.schema)
+    def probeJobs(q: DataFrame): Int = jobsOf(IvfIndex.probe(spark, dir, q, k = 3, nprobe = 1).collect())
+    val (cold, warm, serving) = (probeJobs(queries), probeJobs(queries), probeJobs(local))
     val appendJobs = jobsOf(IvfIndex.append(spark, emb.filter(col("vec_id") % 50 === 0), dir))
-    assert((probeJobs, appendJobs) == ((10, 5)),
-      s"probe ran $probeJobs jobs, append ran $appendJobs")
+    assert((cold, warm, serving, appendJobs) == ((9, 6, 5, 5)),
+      s"probe ran $cold jobs cold, $warm warm, $serving on the serving shape; append ran $appendJobs")
   }
 
   test("a rebuild over an existing index dir with a different nlist assigns exactly like a fresh build") {
@@ -296,6 +348,84 @@ class IvfIndexSpec extends AnyFunSuite {
     IvfIndex.append(spark, batch, reused)
     IvfIndex.append(spark, batch, fresh)
     assert(layout(reused) == layout(fresh))
+  }
+
+  /** 240 random 8-dim vectors in `mod` label lists, as (vec_id, label, embedding). */
+  private def randomCorpus(mod: Int): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(53)
+    (0L until 240L).map(i => (i, (i % mod).toInt, Seq.fill(8)(math.rint(rnd.nextGaussian() * 1e6) / 1e6)))
+      .toDF("vec_id", "label", "embedding")
+  }
+
+  /** Jobs of routing the local `queries` through a fresh [[IvfIndex.open]]
+    * of `dir`: loading the centroid literal is a job, so this is 0 exactly
+    * when the handle reuses the state cached for the directory's build.
+    */
+  private def routeJobs(dir: String, queries: DataFrame): Int =
+    jobsOf(IvfIndex.routeOf(spark, IvfIndex.open(spark, dir), queries, nprobe = 1).collect())
+
+  private def windowsIn(df: DataFrame): Int = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case w: WindowExec => w }.size
+  }
+
+  test("a cached handle follows appends and compaction: each probe reads the catalog afresh") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_handle").toString
+    val corpus = randomCorpus(7)
+    IvfIndex.build(spark, corpus, dir)
+    val rnd = new scala.util.Random(59)
+    val fresh = Seq.fill(8)(math.rint(rnd.nextGaussian() * 1e6) / 1e6)
+    // local relation: the serving shape, routed on the driver
+    val queries = ((0L until 6L).map(i => (i, Seq.fill(8)(rnd.nextGaussian()))) :+ ((6L, fresh)))
+      .toDF("qid", "qvec")
+    def probeAll(): DataFrame = IvfIndex.probe(spark, dir, queries, k = 5, nprobe = 7)
+    def exact(live: DataFrame): Seq[Seq[Any]] =
+      graft.operators.Knn.topK(queries, live.select("vec_id", "embedding"), 5)
+        .select("qid", "vec_id", "score", "rank").collect().map(_.toSeq).toSeq
+    def rowsOf(df: DataFrame): Seq[Seq[Any]] =
+      df.select("qid", "vec_id", "score", "rank").collect().map(_.toSeq).toSeq
+
+    assert(IvfIndex.open(spark, dir).versionUnique)
+    assert(routeJobs(dir, queries) > 0, "the first open of a build loads its centroids")
+    assert(windowsIn(probeAll()) == 0, "a build-only layout skips the LWW window")
+    assert(routeJobs(dir, queries) == 0, "a later open of the same build reuses the cached state")
+    // re-upsert id 5 with `fresh` (it may move lists) and add id 1000
+    val batch = Seq((5L, 5, fresh), (1000L, 1, fresh.reverse)).toDF("vec_id", "label", "embedding")
+    IvfIndex.append(spark, batch, dir)
+    assert(routeJobs(dir, queries) == 0, "an append keeps the build: the cached state is reused")
+    val reopened = IvfIndex.open(spark, dir)
+    assert(reopened.meta.map(_.nextVersion).contains(2L) && !reopened.versionUnique)
+    val live = corpus.filter(col("vec_id") =!= 5L).unionByName(batch)
+    val afterAppend = probeAll()
+    assert(windowsIn(afterAppend) == 1, "the probe after an append must run the LWW window")
+    val got = rowsOf(afterAppend)
+    assert(got == exact(live), "probing every list must equal exact search over the live vectors")
+    assert(got.filter(_.head == 6L).head.take(3) == Seq(6L, 5L, 1.0), "the re-upserted vector must be found")
+    // compaction rewrites the layout under the same build
+    IvfIndex.compact(spark, dir)
+    assert(routeJobs(dir, queries) == 0, "compaction keeps the build: the cached state is reused")
+    assert(rowsOf(probeAll()) == got)
+  }
+
+  test("a rebuild of the same directory with another nlist re-opens the handle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_handle_rebuild").toString
+    IvfIndex.build(spark, randomCorpus(7), dir)
+    val rnd = new scala.util.Random(61)
+    val queries = spark.createDataFrame((0L until 8L).map(i => (i, Seq.fill(8)(rnd.nextGaussian()))))
+      .toDF("qid", "qvec")
+    IvfIndex.probe(spark, dir, queries, k = 5, nprobe = 2).collect() // resolves the 7-list state
+    assert(routeJobs(dir, queries) == 0)
+    IvfIndex.build(spark, randomCorpus(3), dir)
+    assert(IvfIndex.open(spark, dir).meta.map(_.nlist).contains(3L))
+    assert(routeJobs(dir, queries) > 0, "a rebuild has a new build_id: its state is resolved afresh")
+    val fresh = java.nio.file.Files.createTempDirectory("graft_ivf_handle_fresh").toString
+    IvfIndex.build(spark, randomCorpus(3), fresh)
+    def rows(d: String) = IvfIndex.probe(spark, d, queries, k = 5, nprobe = 2).collect().map(_.toSeq).toSeq
+    val got = rows(dir)
+    assert(got.nonEmpty && got.forall(r => r(1).asInstanceOf[Long] < 3L) && got == rows(fresh),
+      "the probe must route with the rebuilt centroids")
   }
 
   test("an explicit-version append below 1 is rejected and leaves the index byte-identical") {
@@ -401,12 +531,10 @@ class IvfIndexSpec extends AnyFunSuite {
     val dirs = new java.io.File(IvfIndex.pointsPath(dir))
       .listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("list_id=")))
-    val plan = IvfIndex.prunedPointsScan(spark, dir, Seq(dirs.head.stripPrefix("list_id=").toLong))
-      .queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*list_id""".r.findFirstIn(plan).isDefined)
-
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    assert(staticFilterOn(pointsScan(IvfIndex.probe(spark, dir, queries), dir).partitionFilters, "list_id"))
+
     val exact = graft.operators.Knn.knnTopkCosine(spark, TestSpark.Sf0001)
       .select($"qid", $"vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
