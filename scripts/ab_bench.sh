@@ -15,10 +15,13 @@
 # holds: at least 10 pairs, wins on >= 9/10 of them, and a median gap larger
 # than the parent's interquartile range. After the pairs it runs one traced
 # run per side on the first seed and prints, per layer, its `jobs`,
-# `wall_s`, `call_s` and `gap_s` metrics side by side: job counts repeat
-# exactly per seed, and the three times split a layer's wall time into the
-# call before its lazy result returns and the driver gap between its jobs,
-# so together they show where a wall-time difference sits. It reads the
+# `wall_s`, `call_s` and `gap_s` metrics side by side, plus `planning_s`
+# and `add_batch_s` where the layer has them (the stream micro-batch): job
+# counts repeat exactly per seed, and the times split a layer's wall time
+# into the call before its lazy result returns, the driver gap between its
+# jobs, and a micro-batch's planning and sink time, so together they show
+# where a wall-time difference sits. Layers whose metrics are all 0 on both
+# sides (the workload does not run them) are left out. It reads the
 # benchmark and never edits it.
 #
 # Environment:
@@ -140,14 +143,20 @@ else:
     par, chg = (r["metrics"] for r in traced)
     ops = [n[:-5] for n in par if n.endswith(".jobs")]
     ops += [n[:-5] for n in chg if n.endswith(".jobs") and n[:-5] not in ops]
-    fields = ("jobs", "wall_s", "call_s", "gap_s")
+    fields = ("jobs", "wall_s", "call_s", "gap_s", "planning_s", "add_batch_s")
+
+    def value(side, op, field):
+        return side.get(f"{op}.{field}", {}).get("value")
 
     def cell(side, op, field):
-        v = side.get(f"{op}.{field}", {}).get("value")
+        v = value(side, op, field)
         return "-" if v is None else f"{v:g}" if field == "jobs" else f"{v:.3f}"
 
     print(f"{'layer':<24}" + "".join(f" {f:>15}" for f in fields))
     for op in ops:
+        # a layer the workload never runs reports zeros on both sides
+        if all(not value(side, op, f) for side in (par, chg) for f in fields):
+            continue
         print(f"{op:<24}" + "".join(f" {cell(par, op, f) + ' / ' + cell(chg, op, f):>15}" for f in fields))
 EOF
 echo "ab: run outputs in $out" >&2

@@ -193,12 +193,13 @@ object Audit {
     try {
     val candidates = DedupExtras.bandCandidatesFromShingles(sh)
       .localCheckpoint(true)
-    val truth = sh.select(col("doc_id").as("a_id"), col("sh").as("sha"))
-      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("shb")),
+    // docs under 3 tokens carry an empty set: the oracle drops them, and
+    // two empty sets would divide 0 by 0
+    val shingled = sh.filter(size(col("sh")) > 0)
+    val truth = shingled.select(col("doc_id").as("a_id"), col("sh").as("sha"))
+      .join(shingled.select(col("doc_id").as("b_id"), col("sh").as("shb")),
         col("a_id") < col("b_id"))
-      .filter(round(size(array_intersect(col("sha"), col("shb")))
-        / size(array_union(col("sha"), col("shb"))).cast("double"), 6)
-        >= DedupExtras.JaccardThreshold)
+      .filter(DedupExtras.jaccardOf(col("sha"), col("shb")) >= DedupExtras.JaccardThreshold)
       .select(col("a_id"), col("b_id"))
       .localCheckpoint(true)
     val nTruth = truth.agg(count(lit(1)).as("truth_pairs"))

@@ -60,7 +60,9 @@ object Curation {
     * the measured-fastest boundary placement (see object scaladoc): the
     * decontaminated frame cached across its consumers and the final pack
     * plan eagerly localCheckpoint'ed. Row-identical to [[curationPlanOf]]
-    * (spec-pinned).
+    * (spec-pinned). Doc_ids must be unique: the sentence stage
+    * ([[TextAnalysis.fuzzySentenceDedupOf]]) fuses rows that share one,
+    * and no check runs, since it would cost a job.
     */
   def curationPipelineOf(docs: DataFrame): DataFrame = {
     // lang lookup against the RAW corpus, not the survivors frame

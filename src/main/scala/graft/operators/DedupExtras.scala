@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -32,9 +32,28 @@ object DedupExtras {
   val Bands     = 4 // 2 signature rows per band
   val JaccardThreshold = 0.5
 
-  /** Distinct word-3-gram shingle set per document (docs with <3 tokens have
-    * no shingles and drop out) — the standard shingling step. Works on ANY
-    * (doc_id, text, …) frame.
+  /** Distinct word-3-gram shingle set per document — the standard
+    * shingling step, one (doc_id, sh) row per doc of ANY (doc_id, text, …)
+    * frame. A doc with <3 tokens has an EMPTY set (a null text, a null
+    * set): it yields no signature, band row or candidate, so every
+    * consumer that explodes or joins the sets drops it; a consumer that
+    * pairs raw sets (q108's truth side) filters it out itself.
+    *
+    * No row filter here, on purpose: the tokenizer then runs once per doc.
+    * A filter on `toks` (or on `sh`) is pushed below the tokenizing
+    * projection, which evaluates `regexp_extract_all` once in that Filter
+    * and again in the Project above it, and an inner `explode(sh)`
+    * downstream infers `size(sh) > 0` that lands in the same Filter —
+    * seven tokenizer runs per doc, measured in the stream's micro-batch
+    * plan (PlanShapeSpec pins one per shingling subtree).
+    */
+  private[graft] def shingleSetsOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), TextPipeline.tokenArr(col("text")).as("toks"))
+      .select(col("doc_id"), shingleSetOf(col("toks")).as("sh"))
+
+  /** The distinct word-3-gram shingles of one token array — the per-row
+    * form [[shingleSetsOf]] applies, empty below 3 tokens.
     *
     * Assembly is the q78 zip-with-tails trick, NOT an index-probing
     * lambda (`transform(sequence(…), i -> concat(toks[i], …))`): after
@@ -42,25 +61,49 @@ object DedupExtras {
     * regexp tokenizer PER ELEMENT REFERENCE (3 × shingles per doc), while
     * the three slices reference it a constant few times per row —
     * measured 8.8 s → 0.6 s for the q108 signature aggregate at sf0.1.
-    *
-    * The slice length is clamped at 0, so the shingle expression is total
-    * even on docs the `>= 3` filter drops: the optimizer may evaluate it
-    * ahead of that filter (an inferred `size(sh) > 0` from a downstream
-    * explode, folded over a local relation), and a negative slice length
-    * throws.
+    * The slice length is clamped at 0, so a short array yields the empty
+    * set instead of a negative slice length, which throws.
     */
-  private[graft] def shingleSetsOf(docs: DataFrame): DataFrame = {
-    val n = greatest(size(col("toks")) - 2, lit(0))
-    docs
-      .select(col("doc_id"), TextPipeline.tokenArr(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), array_distinct(transform(
-        arrays_zip(
-          slice(col("toks"), lit(1), n).as("w1"),
-          slice(col("toks"), lit(2), n).as("w2"),
-          slice(col("toks"), lit(3), n).as("w3")),
-        s => concat_ws(" ", s.getField("w1"), s.getField("w2"), s.getField("w3"))))
-        .as("sh"))
+  private[graft] def shingleSetOf(toks: Column): Column = {
+    val n = greatest(size(toks) - 2, lit(0))
+    array_distinct(transform(
+      arrays_zip(
+        slice(toks, lit(1), n).as("w1"),
+        slice(toks, lit(2), n).as("w2"),
+        slice(toks, lit(3), n).as("w3")),
+      s => concat_ws(" ", s.getField("w1"), s.getField("w2"), s.getField("w3"))))
+  }
+
+  /** Exact shingle-set Jaccard of two `sh` columns, rounded to 6 dp — the
+    * verification every MinHash path applies as `jaccardOf(a, b) >=
+    * threshold`, pair joins and per-row candidate lists alike.
+    */
+  private[graft] def jaccardOf(a: Column, b: Column): Column =
+    round(size(array_intersect(a, b)) / size(array_union(a, b)).cast("double"), 6)
+
+  /** Hash `i` of the MinHash family over one shingle: md5(i || ':' || s),
+    * or seeded xxhash64 when `fastHash`.
+    */
+  private def slotHash(i: Int, s: Column, fastHash: Boolean): Column =
+    if (fastHash) xxhash64(lit(i), s) else md5(concat(lit(s"$i:"), s))
+
+  /** Signature slot `i` of ONE row's shingle set — the per-row form of
+    * [[signaturesOf]]'s aggregate, `array_min(transform(sh, s -> md5('i:'
+    * || s)))`, null for an empty set. Spec-pinned equal to it.
+    */
+  private[graft] def signatureOf(sh: Column, i: Int, fastHash: Boolean = false): Column =
+    array_min(transform(sh, s => slotHash(i, s, fastHash)))
+
+  /** The `bands` band keys of one row's signature slots, band b digesting
+    * its numHashes/bands consecutive slots — the per-row form
+    * [[bandRowsOf]] explodes.
+    */
+  private[graft] def bandKeysOf(sigs: Seq[Column], bands: Int = Bands,
+                                fastHash: Boolean = false): Seq[Column] = {
+    require(bands > 0 && sigs.size % bands == 0,
+      s"numHashes=${sigs.size} must split evenly into bands=$bands")
+    sigs.grouped(sigs.size / bands).toSeq.map(rows =>
+      if (fastHash) xxhash64(rows: _*) else md5(concat(rows: _*)))
   }
 
   /** 8-way MinHash signature (doc_id, sig0..sig7) from a shingle-set frame.
@@ -77,6 +120,10 @@ object DedupExtras {
     * alternative (array_min over transform, zero shuffle) measured 2×
     * SLOWER at sf0.1 because higher-order lambdas evaluate interpreted
     * while this explode/aggregate pipeline is whole-stage codegen'd.
+    * The shingles explode with the _outer form plus a filter on the
+    * element: an inner explode makes the optimizer infer `size(sh) > 0`
+    * and push it below an uncached shingle projection, re-running the
+    * tokenizer there. A doc with an empty set has no signature row.
     */
   /** `fastHash=false` (declared rows): md5 signatures, so the DuckDB
     * oracle recomputes identical banding. `fastHash=true` (production
@@ -85,36 +132,27 @@ object DedupExtras {
     * stage dominates (BASELINE.md width ladder). Candidate sets differ
     * only by hash accident; the verified answer is exact either way.
     */
-  private[operators] def signaturesOf(sh: DataFrame,
-                                      numHashes: Int = NumHashes,
-                                      fastHash: Boolean = false): DataFrame = {
-    val exploded = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-    val sigCols = (0 until numHashes).map(i =>
-      if (fastHash) min(xxhash64(lit(i), col("s"))).as(s"sig$i")
-      else min(md5(concat(lit(s"$i:"), col("s")))).as(s"sig$i"))
+  private[graft] def signaturesOf(sh: DataFrame,
+                                  numHashes: Int = NumHashes,
+                                  fastHash: Boolean = false): DataFrame = {
+    val exploded = sh.select(col("doc_id"), explode_outer(col("sh")).as("s"))
+      .filter(col("s").isNotNull)
+    val sigCols = (0 until numHashes).map(i => min(slotHash(i, col("s"), fastHash)).as(s"sig$i"))
     exploded.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
   /** One band row (doc_id, band, bkey) per (doc, band) via a single
-    * posexplode — NOT a per-band union, which would re-run the whole
-    * signature aggregation per band. Band b's key digests its
-    * numHashes/bands consecutive signature rows.
+    * posexplode of [[bandKeysOf]] — NOT a per-band union, which would
+    * re-run the whole signature aggregation per band.
     */
-  private[operators] def bandRowsOf(sigs: DataFrame,
-                                    numHashes: Int = NumHashes,
-                                    bands: Int = Bands,
-                                    fastHash: Boolean = false): DataFrame = {
-    require(bands > 0 && numHashes % bands == 0,
-      s"numHashes=$numHashes must split evenly into bands=$bands")
-    val r = numHashes / bands
-    val bandKeys = (0 until bands).map { b =>
-      val rows = (0 until r).map(j => col(s"sig${b * r + j}"))
-      if (fastHash) xxhash64(rows: _*) else md5(concat(rows: _*))
-    }
+  private[graft] def bandRowsOf(sigs: DataFrame,
+                                numHashes: Int = NumHashes,
+                                bands: Int = Bands,
+                                fastHash: Boolean = false): DataFrame =
     sigs
-      .select(col("doc_id"), posexplode(array(bandKeys: _*)))
+      .select(col("doc_id"), posexplode(array(
+        bandKeysOf((0 until numHashes).map(i => col(s"sig$i")), bands, fastHash): _*)))
       .toDF("doc_id", "band", "bkey")
-  }
 
   /** Raw LSH CANDIDATE pairs (a_id < b_id, distinct) at a given signature
     * width — the banding stage alone, before Jaccard verification. This
@@ -201,9 +239,7 @@ object DedupExtras {
     candidates
       .join(sa, Seq("a_id"))
       .join(sb, Seq("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(size(array_intersect(col("sha"), col("shb")))
-          / size(array_union(col("sha"), col("shb"))).cast("double"), 6).as("jaccard"))
+      .select(col("a_id"), col("b_id"), jaccardOf(col("sha"), col("shb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .localCheckpoint(true)
     } finally sh.unpersist()
@@ -242,9 +278,7 @@ object DedupExtras {
     candidates
       .join(shB.select(col("doc_id").as("batch_id"), col("sh").as("shb")), Seq("batch_id"))
       .join(storeShingles.select(col("doc_id").as("store_id"), col("sh").as("shs")), Seq("store_id"))
-      .select(col("batch_id"), col("store_id"),
-        round(size(array_intersect(col("shb"), col("shs")))
-          / size(array_union(col("shb"), col("shs"))).cast("double"), 6).as("jaccard"))
+      .select(col("batch_id"), col("store_id"), jaccardOf(col("shb"), col("shs")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

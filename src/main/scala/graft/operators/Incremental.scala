@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,22 +25,133 @@ import graft.Tables
   * operator is the content-addressed version that catches re-crawls under
   * NEW ids — what incremental curation actually needs.
   *
-  * Every entry point runs the one plan [[classify]] builds over a
-  * [[StoreFrames]] triple; they differ only in where the store side comes
-  * from. The production path reads it from the persisted artifacts
-  * ([[buildStoreArtifacts]], maintained once per snapshot — the q54
-  * persisted-artifact pattern): per-batch cost is batch-scale plus one
-  * equi-join probe into each artifact, and nothing rescans store text.
-  * The inline path (q80) derives it from the store documents, which is
-  * the oracle-checkable rendering of the same dataflow.
+  * Every entry point runs the one rule [[classify]] states over a
+  * [[StoreSide]]; they differ only in where the store side comes from and
+  * how it is carried. The production path reads it from the persisted
+  * artifacts ([[buildStoreArtifacts]], maintained once per snapshot — the
+  * q54 persisted-artifact pattern) through [[storeArtifacts]], which loads
+  * a store under [[StoreTableBound]] shingles into broadcast lookup
+  * tables (a batch is then one narrow pass) and probes a larger one with
+  * one equi-join into each artifact; nothing rescans store text. The
+  * inline path (q80) derives the frames from the store documents, which
+  * is the oracle-checkable rendering of the same dataflow.
   */
 object Incremental {
 
-  /** The store side of a classification: the md5 fingerprint set
-    * (fp, exact_store_id), the shingle sets (doc_id, sh) and the LSH band
-    * rows (doc_id, band, bkey).
+  /** The store side of a classification, in one of two carriers that
+    * [[classify]] turns into the same verdicts: [[StoreFrames]] (equi-joins
+    * into the store tables) or [[StoreLookup]] (the tables loaded on the
+    * driver, broadcast, probed per row). [[storeArtifacts]] picks between
+    * them; the inline path ([[incrementalDedupOf]]) always joins.
+    */
+  sealed trait StoreSide
+
+  /** The store side as frames: the md5 fingerprint set (fp,
+    * exact_store_id), the shingle sets (doc_id, sh) and the LSH band rows
+    * (doc_id, band, bkey).
     */
   final case class StoreFrames(fps: DataFrame, shingles: DataFrame, bands: DataFrame)
+    extends StoreSide
+
+  /** The store side as lookup tables broadcast to the executors, with the
+    * two UDFs that probe them: `exactId(fp)` and `candidates(bandKeys)`.
+    * The UDFs close over the broadcast handle only, so every plan built on
+    * one [[StoreLookup]] ships the tables once, whatever its batch.
+    */
+  final class StoreLookup private[operators] (tables: Broadcast[StoreTables]) extends StoreSide {
+    private[operators] val exactId: UserDefinedFunction = exactIdUdf(tables)
+    private[operators] val candidates: UserDefinedFunction = candidatesUdf(tables)
+  }
+
+  // built outside StoreLookup, so each closure captures the handle alone
+  private def exactIdUdf(bc: Broadcast[StoreTables]): UserDefinedFunction =
+    udf((fp: String) => bc.value.exactId(fp))
+  private def candidatesUdf(bc: Broadcast[StoreTables]): UserDefinedFunction =
+    udf((keys: Seq[String]) => bc.value.candidates(keys))
+
+  /** One candidate store doc of a batch doc: its id and shingle set. */
+  final case class Candidate(store_id: Long, sh: Seq[String])
+
+  /** The three store artifacts as flat, sorted arrays — cheap to serialize
+    * once and to probe per row, with no per-entry objects beyond the
+    * strings:
+    *   - fingerprints: `fpKeys` sorted, `fpIds(i)` the min store id of
+    *     `fpKeys(i)`;
+    *   - band buckets: per band b, `bandKeys(b)` sorted with repeats and
+    *     `bandIds(b)` parallel to it, ascending within one key;
+    *   - shingle sets: `docIds` sorted; doc i's set is
+    *     `vocab(codes(j))` for j in `offsets(i) until offsets(i + 1)` (CSR
+    *     over one dictionary of the distinct shingles, which store docs
+    *     share heavily).
+    */
+  final class StoreTables private[operators] (
+      fpKeys: Array[String], fpIds: Array[Long],
+      bandKeys: Array[Array[String]], bandIds: Array[Array[Long]],
+      docIds: Array[Long], offsets: Array[Int], codes: Array[Int], vocab: Array[String])
+    extends Serializable {
+
+    /** The min store id whose text has md5 `fp`, or null. */
+    def exactId(fp: String): java.lang.Long =
+      if (fp == null) null
+      else {
+        val i = java.util.Arrays.binarySearch(fpKeys.asInstanceOf[Array[AnyRef]], fp)
+        if (i >= 0) java.lang.Long.valueOf(fpIds(i)) else null
+      }
+
+    /** The store docs sharing a band bucket with a doc whose band b has key
+      * `keys(b)`, distinct, ascending by id, each with its shingle set.
+      */
+    def candidates(keys: Seq[String]): Seq[Candidate] = {
+      val ids = scala.collection.mutable.TreeSet.empty[Long]
+      keys.iterator.zipWithIndex.foreach { case (k, b) =>
+        if (k != null && b < bandKeys.length) {
+          val ks = bandKeys(b)
+          var i = lowerBound(ks, k)
+          while (i < ks.length && ks(i) == k) { ids += bandIds(b)(i); i += 1 }
+        }
+      }
+      ids.toSeq.map { id =>
+        val d = java.util.Arrays.binarySearch(docIds, id)
+        Candidate(id, if (d < 0) Nil else (offsets(d) until offsets(d + 1)).map(j => vocab(codes(j))))
+      }
+    }
+
+    private def lowerBound(a: Array[String], k: String): Int = {
+      var lo = 0; var hi = a.length
+      while (lo < hi) { val mid = (lo + hi) >>> 1; if (a(mid).compareTo(k) < 0) lo = mid + 1 else hi = mid }
+      lo
+    }
+  }
+
+  private[operators] object StoreTables {
+    /** Collect the three store frames into tables — three jobs, driver
+      * memory linear in the store's shingle total.
+      */
+    def of(store: StoreFrames): StoreTables = {
+      val fps = store.fps.select(col("fp"), col("exact_store_id")).collect()
+        .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
+      val bands = store.bands.select(col("band"), col("bkey"), col("doc_id")).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      val nBands = if (bands.isEmpty) 0 else bands.map(_._1).max + 1
+      val byBand = (0 until nBands).map(b => bands.filter(_._1 == b).map(t => (t._2, t._3)).sorted)
+      val sets = store.shingles.select(col("doc_id"), col("sh")).collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) Seq.empty[String] else r.getSeq[String](1)))
+        .sortBy(_._1)
+      val dict = scala.collection.mutable.HashMap.empty[String, Int]
+      val vocab = scala.collection.mutable.ArrayBuffer.empty[String]
+      val offsets = new Array[Int](sets.length + 1)
+      val codes = new Array[Int](sets.iterator.map(_._2.size).sum)
+      var j = 0
+      sets.iterator.zipWithIndex.foreach { case ((_, sh), i) =>
+        offsets(i) = j
+        sh.foreach { s => codes(j) = dict.getOrElseUpdate(s, { vocab += s; vocab.size - 1 }); j += 1 }
+      }
+      offsets(sets.length) = j
+      new StoreTables(fps.map(_._1), fps.map(_._2),
+        byBand.map(_.map(_._1)).toArray, byBand.map(_.map(_._2)).toArray,
+        sets.map(_._1), offsets, codes, vocab.toArray)
+    }
+  }
 
   /** q80_incremental_dedup — declared fixture: the store is the documents
     * table; the batch is a deterministic mix of exact re-crawls
@@ -87,7 +200,8 @@ object Incremental {
     * The result is materialized (batch-ids scale) before the caches are
     * released — operator-scoped, no cached blocks outlive the call. The
     * corpus md5 aggregate is one subtree that the exact pass's consumers
-    * share through exchange reuse.
+    * share through exchange reuse. Batch doc_ids must be unique
+    * ([[classify]]).
     */
   def incrementalDedupOf(batch: DataFrame, store: DataFrame): DataFrame = {
     val docs = batch.select(col("doc_id"), col("text")).cache()
@@ -100,22 +214,59 @@ object Incremental {
     finally { shS.unpersist(); docs.unpersist() }
   }
 
-  /** Resolve the three persisted artifact tables ([[buildStoreArtifacts]])
-    * into frames: one file listing and one schema read per table, paid
-    * here and not by the classifications that probe them. The frames pin
-    * the files listed now, so the artifacts must not be rebuilt while a
-    * holder of these frames still classifies against them.
+  /** Largest store, counted in shingles summed over its docs, that
+    * [[storeArtifacts]] loads into lookup tables; a larger store is probed
+    * through the artifact frames. Set by measurement (q181, `local[4]`,
+    * median of 3): on the 5k-doc sf0.1 store (260k shingles) the tables
+    * win, 6.8 s against 8.7 s for the joins; on its 50k-doc GenScale
+    * replica (2.6M) the joins win, 30.4/31.1 s against 35.6/33.9 s, as
+    * loading, broadcasting and the per-row signatures outgrow the jobs
+    * they save. 1M shingles is about 19k docs of sf0.1's length; the
+    * tables then hold one dictionary entry per distinct shingle and one
+    * int per occurrence, tens of MB of driver heap.
     */
-  def storeArtifacts(spark: SparkSession, artifactsDir: String): StoreFrames =
-    StoreFrames(
+  val StoreTableBound = 1000000L
+
+  /** Resolve the three persisted artifact tables ([[buildStoreArtifacts]])
+    * into the store side of [[classify]] — the one place that picks the
+    * carrier. One file listing and one schema read per table, and one job
+    * summing the store's shingles, paid here and not by the
+    * classifications that probe them. Then:
+    *   - at most [[StoreTableBound]] shingles: the tables are collected to
+    *     the driver (three jobs) and broadcast ONCE ([[StoreLookup]]), so a
+    *     classification is one narrow pass over its batch;
+    *   - beyond it: the frames themselves ([[StoreFrames]]), which pin the
+    *     files listed now.
+    * Either way the store side is fixed from here on: the artifacts must
+    * not be rebuilt while a holder of it still classifies against them,
+    * and a rebuild needs a new call. The broadcast is never destroyed
+    * explicitly; like the broadcast of Spark's own broadcast joins, the
+    * ContextCleaner releases it once nothing references the returned side.
+    */
+  def storeArtifacts(spark: SparkSession, artifactsDir: String): StoreSide =
+    storeArtifacts(spark, artifactsDir, StoreTableBound)
+
+  /** [[storeArtifacts]] with the bound as a parameter: specs force each
+    * carrier with 0 (frames whenever the store has a shingle) or
+    * Long.MaxValue (tables).
+    */
+  private[graft] def storeArtifacts(spark: SparkSession, artifactsDir: String,
+                                    tableBound: Long): StoreSide = {
+    val frames = StoreFrames(
       spark.read.parquet(s"$artifactsDir/store_fps.parquet"),
       spark.read.parquet(s"$artifactsDir/store_shingles.parquet"),
       spark.read.parquet(s"$artifactsDir/store_bands.parquet"))
+    val total = frames.shingles.agg(sum(size(col("sh")))).head().getAs[Number](0)
+    if (total != null && total.longValue > tableBound) frames
+    else new StoreLookup(spark.sparkContext.broadcast(StoreTables.of(frames)))
+  }
 
   /** The production incremental path as one batch call: [[classify]]
-    * against the PERSISTED store artifacts, sorted by doc_id. Lazy —
-    * nothing runs until the result is consumed. Spec-pinned row-identical
-    * to [[incrementalDedupOf]].
+    * against the PERSISTED store artifacts, sorted by doc_id — through
+    * [[storeArtifacts]], so a store under the bound is loaded and broadcast
+    * for this call. The result is lazy; the store side is resolved here.
+    * Spec-pinned row-identical to [[incrementalDedupOf]]. Batch doc_ids
+    * must be unique ([[classify]]).
     */
   def incrementalDedupAgainstArtifacts(batch: DataFrame, artifactsDir: String): DataFrame =
     classify(batch, storeArtifacts(batch.sparkSession, artifactsDir)).orderBy(col("doc_id"))
@@ -135,19 +286,38 @@ object Incremental {
       .write.mode("overwrite").parquet(s"$dir/store_fps.parquet")
     val sh = DedupExtras.shingleSetsOf(store).cache()
     try {
-      sh.write.mode("overwrite").parquet(s"$dir/store_shingles.parquet")
+      // docs under 3 tokens have an empty set and no band row: left out
+      sh.filter(size(col("sh")) > 0).write.mode("overwrite").parquet(s"$dir/store_shingles.parquet")
       DedupExtras.bandRowsOf(DedupExtras.signaturesOf(sh))
         .write.mode("overwrite").parquet(s"$dir/store_bands.parquet")
     } finally sh.unpersist()
   }
 
-  /** The one classification plan: lazy and cache-free, it emits
+  /** The one classification rule, lazy and cache-free: it emits
     * (doc_id, disposition, matched_store_id) for every batch doc, unsorted.
-    * The exact pass is a single left join of the batch fingerprints onto
-    * `store.fps`; its output feeds both the survivor cut (docs without an
-    * exact match go to the near pass) and the final attribution. Near-dup
-    * tie-break: min store id among verified matches (deterministic; the
-    * exact pass already owns the jaccard=1 case).
+    *   - EXACT wins: a doc whose md5 matches a store fingerprint is
+    *     `exact_dup` of the min store id with that text.
+    *   - NEAR covers the rest that have ≥ 3 tokens: a store doc sharing one
+    *     of its LSH band buckets is a candidate, verified when
+    *     [[DedupExtras.jaccardOf]] ≥ 0.5; the min verified store id wins
+    *     (deterministic; the exact pass already owns the jaccard=1 case).
+    *   - Everything else is `new` with -1.
+    *
+    * CONTRACT: batch doc_ids are unique. The two carriers agree only then —
+    * the join carrier groups near matches by doc_id, so rows sharing one
+    * would share a verdict, as [[TextAnalysis.fuzzySentenceDedupOf]] fuses
+    * them, while the lookup carrier classifies each row alone. Nothing
+    * checks it (a check costs a job per batch).
+    */
+  def classify(batch: DataFrame, store: StoreSide): DataFrame = store match {
+    case frames: StoreFrames => classifyByJoins(batch, frames)
+    case lookup: StoreLookup => classifyByLookup(batch, lookup)
+  }
+
+  /** The join carrier. The exact pass is a single left join of the batch
+    * fingerprints onto `store.fps`; its output feeds both the survivor cut
+    * (docs without an exact match go to the near pass,
+    * [[DedupExtras.crossNearMatchesAgainst]]) and the final attribution.
     *
     * Being lazy, the plan evaluates `batch` once per consumer: for the
     * final attribution, and twice for the survivors (their band rows and
@@ -155,7 +325,7 @@ object Incremental {
     * of one micro-batch's files; a caller whose batch is costly to derive
     * caches it first, as [[incrementalDedupOf]] does.
     */
-  def classify(batch: DataFrame, store: StoreFrames): DataFrame = {
+  private def classifyByJoins(batch: DataFrame, store: StoreFrames): DataFrame = {
     val tagged = batch
       .select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
       .join(store.fps, Seq("fp"), "left")
@@ -164,15 +334,40 @@ object Incremental {
         store.shingles, store.bands)
       .groupBy(col("batch_id"))
       .agg(min(col("store_id")).as("near_store_id"))
-    tagged
-      .join(near, tagged("doc_id") === near("batch_id"), "left")
-      .select(tagged("doc_id"),
-        when(col("exact_store_id").isNotNull, lit("exact_dup"))
-          .when(col("near_store_id").isNotNull, lit("near_dup"))
-          .otherwise(lit("new")).as("disposition"),
-        coalesce(col("exact_store_id"), col("near_store_id"), lit(-1L))
-          .as("matched_store_id"))
+    verdicts(tagged.join(near, tagged("doc_id") === near("batch_id"), "left"))
   }
+
+  /** The lookup carrier: one narrow pass, no join, no shuffle — so a
+    * micro-batch is one Spark job. Per row, in order: md5 and tokens; the
+    * exact probe and the shingle set ([[DedupExtras.shingleSetOf]]); for a
+    * survivor with shingles, its signature ([[DedupExtras.signatureOf]])
+    * and band keys ([[DedupExtras.bandKeysOf]]) and the candidates of
+    * those buckets; the verified candidates' min id. The survivors' cut is
+    * a `when`, so an exact dup computes no signature.
+    */
+  private def classifyByLookup(batch: DataFrame, store: StoreLookup): DataFrame = {
+    import DedupExtras.{NumHashes, JaccardThreshold, signatureOf, bandKeysOf, jaccardOf}
+    val sh = col("sh")
+    val keys = array(bandKeysOf((0 until NumHashes).map(i => signatureOf(sh, i))): _*)
+    verdicts(batch
+      .select(col("doc_id"), md5(col("text")).as("fp"), TextPipeline.tokenArr(col("text")).as("toks"))
+      .select(col("doc_id"), store.exactId(col("fp")).as("exact_store_id"),
+        DedupExtras.shingleSetOf(col("toks")).as("sh"))
+      .select(col("doc_id"), col("exact_store_id"),
+        array_min(transform(
+          filter(
+            when(col("exact_store_id").isNull && size(sh) > 0, store.candidates(keys)),
+            c => jaccardOf(sh, c.getField("sh")) >= JaccardThreshold),
+          c => c.getField("store_id"))).as("near_store_id")))
+  }
+
+  /** The verdict columns over (doc_id, exact_store_id, near_store_id). */
+  private def verdicts(tagged: DataFrame): DataFrame =
+    tagged.select(col("doc_id"),
+      when(col("exact_store_id").isNotNull, lit("exact_dup"))
+        .when(col("near_store_id").isNotNull, lit("near_dup"))
+        .otherwise(lit("new")).as("disposition"),
+      coalesce(col("exact_store_id"), col("near_store_id"), lit(-1L)).as("matched_store_id"))
 
   /** DuckDB mirror: same batch derivation, same exact pass, and the q16
     * oracle's shingle/signature/band CTEs instantiated for both sides of

@@ -2180,6 +2180,11 @@ object TextAnalysis {
     * at worst dropping slightly more than a component-rooted pass would).
     * Sentences under 3 tokens cannot shingle and pass through the fuzzy
     * layer untouched (the exact pass still applies).
+    *
+    * CONTRACT: corpus doc_ids are unique. A sentence's order key is
+    * (doc_id, position), so two rows sharing a doc_id come back FUSED —
+    * one output row interleaving both texts. Nothing checks it: a check
+    * would cost a job on every call.
     */
   def fuzzySentenceDedupOf(corpus: DataFrame,
                            minJaccard: Double = DedupExtras.JaccardThreshold): DataFrame = {

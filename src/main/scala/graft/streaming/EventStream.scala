@@ -361,23 +361,32 @@ object EventStream {
     * artifacts — the continuous-curation loop's decision stage as a
     * stream. The three [[graft.operators.Incremental.buildStoreArtifacts]]
     * tables are resolved ONCE, when the writer is created
-    * ([[graft.operators.Incremental.storeArtifacts]]); every micro-batch
-    * then appends the lazy [[graft.operators.Incremental.classify]] plan
-    * over that one store side — exact md5 probe + MinHash/LSH band probe —
-    * as its (doc_id, disposition, matched_store_id) verdicts to `outDir`,
-    * unsorted, in a single write query that caches and checkpoints
-    * nothing. Classification is per-doc independent, so ANY micro-batch
-    * split of a crawl yields the same verdict set, and the store text is
-    * never rescanned.
+    * ([[graft.operators.Incremental.storeArtifacts]]): a store of at most
+    * [[graft.operators.Incremental.StoreTableBound]] shingles is loaded
+    * into driver memory then, as lookup tables broadcast once for the
+    * whole stream, and every micro-batch is ONE Spark job — scan,
+    * per-row md5/shingle/band-key expressions, the table probes, write.
+    * A larger store stays as artifact frames, probed by equi-joins in
+    * each micro-batch's plan. Either way each micro-batch appends
+    * [[graft.operators.Incremental.classify]]'s (doc_id, disposition,
+    * matched_store_id) verdicts to `outDir`, unsorted, in a single write
+    * query that caches and checkpoints nothing. Classification is per-doc
+    * independent, so ANY micro-batch split of a crawl yields the same
+    * verdict set, and the store text is never rescanned. Doc_ids must be
+    * unique within each micro-batch, as
+    * [[graft.operators.Incremental.classify]] states.
     *
     * CONTRACT: the artifacts are FIXED for the stream's lifetime — the
-    * per-snapshot discipline the batch path documents. The frames resolved
-    * at creation list the artifact files of that moment, so the artifacts
-    * must not be rebuilt while the stream runs; rebuild between streams
-    * and create a new writer. Admission (appending survivors to the store)
-    * stays the separate concern [[fuzzyDedupAgainstStore]] owns; this
-    * writer is the read-only classifier a pipeline fans out to before
-    * deciding.
+    * per-snapshot discipline the batch path documents. What the writer
+    * loaded or listed at creation is what every micro-batch probes, so
+    * the artifacts must not be rebuilt while the stream runs; rebuild
+    * between streams and create a new writer, which loads the new store.
+    * The broadcast tables are not destroyed when the query ends: the
+    * ContextCleaner releases them once the writer and its query are
+    * unreachable, as it does the broadcasts of Spark's own broadcast
+    * joins. Admission (appending survivors to the store) stays the
+    * separate concern [[fuzzyDedupAgainstStore]] owns; this writer is the
+    * read-only classifier a pipeline fans out to before deciding.
     */
   def classifyAgainstStore(docs: DataFrame, artifactsDir: String, outDir: String,
                            checkpointDir: String): DataStreamWriter[Row] = {
@@ -407,10 +416,11 @@ object EventStream {
     * verdict (per-doc independence against a FIXED snapshot).
     *
     * 100 TB: per-batch cost is the batch's own fingerprinting/shingling
-    * plus equi-join probes into the three persisted artifact tables
-    * (16-byte fp / banded signature shuffles only — q80's audited
-    * shape); the streaming engine adds lifecycle-fixed start/commit
-    * cost like q180, not data-proportional work.
+    * plus probes into the three persisted artifact tables — broadcast
+    * lookups under the table bound, equi-joins (16-byte fp / banded
+    * signature shuffles only — q80's audited shape) beyond it; the
+    * streaming engine adds lifecycle-fixed start/commit cost like q180,
+    * not data-proportional work.
     */
   def streamDedupStore(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Incremental

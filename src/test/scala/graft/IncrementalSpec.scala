@@ -1,10 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array, col, posexplode, size}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Incremental
+import graft.operators.{DedupExtras, Incremental}
 import graft.streaming.EventStream
 
 /** q80 incremental dedup: the batch-vs-store classification must catch
@@ -174,11 +174,126 @@ class IncrementalSpec extends AnyFunSuite {
       s"${streamed.size} streamed verdicts vs ${oneCall.size} from one call")
     assert(oneCall.map(_._2).toSet == Set("exact_dup", "near_dup", "new"))
     assert(oneCall.contains((4000000L, "new", -1L)), "a <3-token doc cannot near-match")
-    // every micro-batch is one write query over store frames resolved when
-    // the writer was created: no artifact re-listing or schema read, no
-    // cache, no checkpoint — an extra Spark action per batch fails here
-    assert(jobsPerBatch.size == 3 && jobsPerBatch.values.forall(_ == 8),
+    // every micro-batch is ONE job: the write of its verdicts, a narrow
+    // scan -> per-row expressions -> table probes -> parquet pass over
+    // lookup tables the writer loaded and broadcast at creation. No
+    // artifact listing, schema read, table load or broadcast, no shuffle,
+    // cache or checkpoint — any extra Spark action per batch fails here
+    assert(jobsPerBatch.size == 3 && jobsPerBatch.values.forall(_ == 1),
       s"jobs per micro-batch: $jobsPerBatch")
+  }
+
+  test("a writer created after the artifacts are rebuilt classifies against the new store") {
+    import spark.implicits._
+    val (artifacts, src, batch) = stagedStream(2)
+    val (first, _) = runClassifyStream(artifacts, src, batch.schema)
+    // the same directory, rebuilt from a snapshot without the sources of
+    // the exact re-crawls (doc_id % 5 == 0): the stream that ran keeps
+    // its verdicts, a new writer must load the new tables
+    val store2 = Tables.documents(spark, TestSpark.Sf0001).select("doc_id", "text")
+      .filter(col("doc_id") % 5 =!= 0)
+    Incremental.buildStoreArtifacts(store2, artifacts)
+    val (second, _) = runClassifyStream(artifacts, src, batch.schema)
+    val expected = Incremental.incrementalDedupOf(batch, store2).as[(Long, String, Long)].collect().toSeq
+    assert(second == expected, s"${second.size} verdicts after the rebuild vs ${expected.size} expected")
+    assert(first != second && first.count(_._2 == "exact_dup") > second.count(_._2 == "exact_dup"),
+      "the rebuild must change the exact verdicts of the re-crawls whose source it dropped")
+  }
+
+  /** A hand store with built artifacts, a batch planting the rule's edge
+    * cases, and the verdicts the rule gives them. Premises the cases rely
+    * on (band collisions) are checked, so a change of hash family fails
+    * here rather than hollowing a case out.
+    */
+  private def plantedStore(): (String, DataFrame, Seq[(Long, String, Long)]) = {
+    import spark.implicits._
+    def words(tag: String, n: Int): String = (0 until n).map(i => s"$tag$i").mkString(" ")
+    val e = words("e", 40)
+    val m = words("m", 40)
+    val half = words("s0x", 12)   // 10 shingles
+    val below = words("s1x", 102) // 100 shingles
+    val store = Seq(
+      (3L, s"$e tail words"),       // near-dup of batch 101, lower id than its exact copy
+      (30L, e),
+      (40L, half),
+      (50L, below),
+      (62L, s"$m alpha beta"),
+      (60L, s"$m gamma delta epsilon"),
+      (61L, s"$m zeta")
+    ).toDF("doc_id", "text")
+    val batch = Seq(
+      (101L, e),                             // exact copy of 30, near candidate of 3: exact wins
+      (102L, s"$half ${words("s0y", 10)}"),  // jaccard 10/20 = 0.5 exactly: verified
+      (103L, s"$below ${words("s1y", 101)}"),// jaccard 100/201 = 0.497512: rejected
+      (104L, s"$m eta theta"),               // near-dup of 60, 61 and 62: the min id wins
+      (105L, "hi there")                     // < 3 tokens: cannot near-match
+    ).toDF("doc_id", "text")
+    val bandsOf = (df: DataFrame) => DedupExtras.bandRowsOf(DedupExtras.signaturesOf(DedupExtras.shingleSetsOf(df)))
+    val shared = bandsOf(store).as("s").join(bandsOf(batch).as("b"), Seq("band", "bkey"))
+      .select(col("b.doc_id"), col("s.doc_id"), col("band")).as[(Long, Long, Int)].collect().toSeq
+    def bandsShared(b: Long, s: Long) = shared.collect { case (`b`, `s`, band) => band }.toSet
+    assert(bandsShared(101L, 3L).nonEmpty, "101 must be a near candidate of 3")
+    assert(bandsShared(102L, 40L).nonEmpty && bandsShared(103L, 50L).nonEmpty,
+      "the threshold cases must be band candidates, or verification is never asked")
+    assert(Seq(60L, 61L, 62L).forall(bandsShared(104L, _).nonEmpty) &&
+      Seq(60L, 61L, 62L).flatMap(bandsShared(104L, _)).toSet.size >= 2,
+      "104 must reach all three store variants, through more than one band")
+    val dir = java.nio.file.Files.createTempDirectory("graft_planted_art").toString
+    Incremental.buildStoreArtifacts(store, dir)
+    (dir, batch, Seq(
+      (101L, "exact_dup", 30L),
+      (102L, "near_dup", 40L),
+      (103L, "new", -1L),
+      (104L, "near_dup", 60L),
+      (105L, "new", -1L)))
+  }
+
+  test("the lookup and join carriers give identical verdicts on planted edge cases and on q80's batch") {
+    import spark.implicits._
+    val (dir, planted, expected) = plantedStore()
+    val lookup = Incremental.storeArtifacts(spark, dir, Long.MaxValue)
+    val joins = Incremental.storeArtifacts(spark, dir, 0L)
+    assert(lookup.isInstanceOf[Incremental.StoreLookup] && joins.isInstanceOf[Incremental.StoreFrames])
+    def run(side: Incremental.StoreSide, b: DataFrame) =
+      Incremental.classify(b, side).as[(Long, String, Long)].collect().toSeq.sortBy(_._1)
+    assert(run(lookup, planted) == expected)
+    assert(run(joins, planted) == expected)
+    assert(run(lookup, planted.limit(0)).isEmpty && run(joins, planted.limit(0)).isEmpty,
+      "an empty micro-batch classifies to no rows")
+    // the fixture store: every stratum of q80's batch, in one and in three batches
+    val store = Tables.documents(spark, TestSpark.Sf0001).select("doc_id", "text")
+    val art = java.nio.file.Files.createTempDirectory("graft_carrier_art").toString
+    Incremental.buildStoreArtifacts(store, art)
+    val q80 = Incremental.batchOf(store)
+    val viaLookup = Incremental.storeArtifacts(spark, art, Long.MaxValue)
+    val viaJoins = Incremental.storeArtifacts(spark, art, 0L)
+    val whole = run(viaLookup, q80)
+    assert(whole.map(_._2).toSet == Set("exact_dup", "near_dup", "new"))
+    assert(whole == run(viaJoins, q80))
+    val split = (0 until 3).flatMap(i => run(viaLookup, q80.filter(col("doc_id") % 3 === i))).sortBy(_._1)
+    assert(split == whole, "classification is per-doc: a batch split changes no verdict")
+  }
+
+  test("the per-row signature and band keys equal the aggregate signaturesOf and bandRowsOf") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val vocab = (0 until 40).map(i => s"t$i")
+    val docs = (0 until 200).map(i => (i.toLong, Seq.fill(rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+      .toDF("doc_id", "text")
+    val sh = DedupExtras.shingleSetsOf(docs).cache()
+    try {
+      val slots = (0 until DedupExtras.NumHashes).map(i => DedupExtras.signatureOf(col("sh"), i))
+      val perRow = sh.filter(size(col("sh")) > 0).select(col("doc_id") +: slots.zipWithIndex.map { case (c, i) => c.as(s"sig$i") }: _*)
+      val agg = DedupExtras.signaturesOf(sh)
+      val cols = "doc_id" +: (0 until DedupExtras.NumHashes).map(i => s"sig$i")
+      def rows(df: DataFrame) = df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+      assert(rows(perRow).size > 150 && rows(perRow) == rows(agg))
+      assert(sh.filter(size(col("sh")) === 0).count() > 0, "some docs are under 3 tokens: no signature")
+      val keys = perRow.select(col("doc_id"),
+        posexplode(array(DedupExtras.bandKeysOf(slots.indices.map(i => col(s"sig$i"))): _*)))
+      def bandSet(df: DataFrame) = df.toDF("doc_id", "band", "bkey").as[(Long, Int, String)].collect().toSet
+      assert(bandSet(keys) == bandSet(DedupExtras.bandRowsOf(agg)))
+    } finally sh.unpersist()
   }
 
   test("stream and batch classification leave no persistent RDD or cached block behind") {

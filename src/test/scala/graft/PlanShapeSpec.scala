@@ -400,6 +400,71 @@ class PlanShapeSpec extends AnyFunSuite {
       s"no window belongs in the classification path;\n$p")
   }
 
+  /** The executed plans of every query `f` runs, read off a
+    * QueryExecutionListener once the listener bus is drained.
+    */
+  private def executedPlans(f: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try f
+    finally {
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  /** Every node of `p` that evaluates `regexp_extract_all`, with how many
+    * calls it makes per row, cached plans that `p` reads included. A
+    * scan's data filters only mirror a Filter above it and are not counted.
+    */
+  private def tokenizerNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[(org.apache.spark.sql.execution.SparkPlan, Int)] = {
+    import org.apache.spark.sql.catalyst.expressions.RegExpExtractAll
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val nodes = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}.collect(p) { case n => n }
+    val own = nodes.filterNot(_.isInstanceOf[FileSourceScanExec])
+      .map(n => n -> n.expressions.map(_.collect { case r: RegExpExtractAll => r }.size).sum)
+      .filter(_._2 > 0)
+    own ++ nodes.collect { case s: InMemoryTableScanExec => s.relation.cachedPlan }.distinct.flatMap(tokenizerNodes)
+  }
+
+  test("shingling runs the tokenizer once per doc: artifact build, verified pairs, both stream carriers") {
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.operators.{DedupExtras, Incremental}
+    val docs = Tables.documents(spark, TestSpark.Sf0001).select(col("doc_id"), col("text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_tok_art").toString
+    // near re-crawls: no exact match, so the near pass keeps its subtree
+    val batch = docs.select((col("doc_id") + 3000000).as("doc_id"),
+      concat(col("text"), lit(" please subscribe to our newsletter today")).as("text"))
+    def classified(bound: Long) = {
+      val store = Incremental.storeArtifacts(spark, dir, bound)
+      executedPlans(Incremental.classify(batch, store).collect())
+    }
+    val runs = Seq(
+      "buildStoreArtifacts" -> executedPlans(Incremental.buildStoreArtifacts(docs, dir)),
+      "minhashVerifiedPairsOf" -> executedPlans(DedupExtras.minhashVerifiedPairsOf(docs)),
+      "classify (lookup tables)" -> classified(Long.MaxValue),
+      "classify (join frames)" -> classified(0L))
+    runs.foreach { case (name, plans) =>
+      val nodes = plans.flatMap(tokenizerNodes)
+      // each shingling subtree tokenizes in its one projection; a Filter
+      // pushed below that projection (the `>= 3` cut, or the `size(sh) >
+      // 0` an inner explode infers) would tokenize every doc again
+      assert(nodes.nonEmpty && nodes.forall { case (n, k) => n.isInstanceOf[ProjectExec] && k == 1 },
+        s"$name: nodes evaluating regexp_extract_all ${nodes.map { case (n, k) => s"${n.nodeName} x$k" }}, " +
+          s"want one call in each tokenizing Project;\n${plans.mkString("\n")}")
+    }
+  }
+
   test("q83 leakage-safe split: cluster label + side derive with equi-joins, no extra shuffle stage") {
     val p = plan(graft.operators.DupClusters.leakageSafeSplit(spark, TestSpark.Sf0001))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
