@@ -7,7 +7,11 @@ import org.apache.spark.sql.SparkSession
   * (`runMain graft.Explain [sfDir] [query ...]`). With `-x` as the first
   * query arg, each query EXECUTES (noop sink) before printing, so the
   * output is the FINAL adaptive plan — what AQE actually picked at this
-  * fixture size — instead of the static initial plan.
+  * fixture size — instead of the static initial plan. Every query prints
+  * the plan of the frame its public call returns; a call that materializes
+  * stages while it builds that frame (q70, q92: cache + localCheckpoint)
+  * prints an RDD scan for them. PlanShapeSpec pins the plans such calls
+  * execute.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -67,18 +71,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")
-      // q92's public API materializes per stage (cache + localCheckpoint),
-      // which would print an RDD scan — audit its lazy plan body instead
-      // (q70's fuzzy core inside it has the same property and the same
-      // treatment in PlanShapeSpec)
-      val df =
-        if (n == "q92_curation_pipeline")
-          graft.operators.Curation.curationPlanOf(
-            Tables.documents(spark, sfDir)
-              .select(org.apache.spark.sql.functions.col("doc_id"),
-                org.apache.spark.sql.functions.col("lang"),
-                org.apache.spark.sql.functions.col("text")))
-        else SparkEntry.queries(n)(spark, sfDir)
+      val df = SparkEntry.queries(n)(spark, sfDir)
       // execute the df's OWN QueryExecution (a noop write would plan a
       // separate one, leaving this plan isFinalPlan=false); consume every
       // partition iterator so the result stage actually computes its rows

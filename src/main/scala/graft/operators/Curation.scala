@@ -59,8 +59,7 @@ object Curation {
   /** Composable end-to-end core for ANY (doc_id, lang, text) corpus, with
     * the measured-fastest boundary placement (see object scaladoc): the
     * decontaminated frame cached across its consumers and the final pack
-    * plan eagerly localCheckpoint'ed. Row-identical to [[curationPlanOf]]
-    * (spec-pinned). Doc_ids must be unique: the sentence stage
+    * plan eagerly localCheckpoint'ed. Doc_ids must be unique: the sentence stage
     * ([[TextAnalysis.fuzzySentenceDedupOf]]) fuses rows that share one,
     * and no check runs, since it would cost a job.
     */
@@ -78,20 +77,6 @@ object Curation {
     val decon = deconOf(docs, rebuilt).cache()
     try selectAndPack(decon).localCheckpoint(true)
     finally decon.unpersist()
-  }
-
-  /** The whole chain as ONE lazy plan (no cache, no checkpoint) —
-    * package-private so PlanShapeSpec pins the composition's REAL physical
-    * shape, which the public API's materialization boundaries would hide
-    * behind RDD scans; also the boundary study's no-boundaries arm.
-    */
-  private[graft] def curationPlanOf(docs: DataFrame): DataFrame = {
-    val survivors = dedupedClean(docs)
-    val rebuilt = TextAnalysis.fuzzySentenceDedupPlan(
-        survivors, TextAnalysis.sentenceUnits(survivors), DedupExtras.JaccardThreshold)
-      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("cleaned").as("text"))
-    selectAndPack(deconOf(docs, rebuilt))
   }
 
   /** Stages 1-2: plant dirt + copies, clean, keep exact-dedup survivors. */

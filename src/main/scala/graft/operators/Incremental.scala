@@ -4,6 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.Tables
 
@@ -229,9 +230,10 @@ object Incremental {
 
   /** Resolve the three persisted artifact tables ([[buildStoreArtifacts]])
     * into the store side of [[classify]] — the one place that picks the
-    * carrier. One file listing and one schema read per table, and one job
-    * summing the store's shingles, paid here and not by the
-    * classifications that probe them. Then:
+    * carrier. One file listing per table, read under the schemas
+    * [[buildStoreArtifacts]] writes ([[StoreSchemas]]), and one job summing
+    * the store's shingles, paid here and not by the classifications that
+    * probe them. Then:
     *   - at most [[StoreTableBound]] shingles: the tables are collected to
     *     the driver (three jobs) and broadcast ONCE ([[StoreLookup]]), so a
     *     classification is one narrow pass over its batch;
@@ -252,10 +254,8 @@ object Incremental {
     */
   private[graft] def storeArtifacts(spark: SparkSession, artifactsDir: String,
                                     tableBound: Long): StoreSide = {
-    val frames = StoreFrames(
-      spark.read.parquet(s"$artifactsDir/store_fps.parquet"),
-      spark.read.parquet(s"$artifactsDir/store_shingles.parquet"),
-      spark.read.parquet(s"$artifactsDir/store_bands.parquet"))
+    def read(table: String) = spark.read.schema(StoreSchemas(table)).parquet(s"$artifactsDir/$table.parquet")
+    val frames = StoreFrames(read("store_fps"), read("store_shingles"), read("store_bands"))
     val total = frames.shingles.agg(sum(size(col("sh")))).head().getAs[Number](0)
     if (total != null && total.longValue > tableBound) frames
     else new StoreLookup(spark.sparkContext.broadcast(StoreTables.of(frames)))
@@ -280,18 +280,29 @@ object Incremental {
     * persisted-artifact pattern applied to dedup state).
     */
   def buildStoreArtifacts(store: DataFrame, dir: String): Unit = {
-    store
+    // ids normalized to long, so every build reads back under StoreSchemas
+    def write(table: String, df: DataFrame): Unit =
+      df.select(StoreSchemas(table).fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+        .write.mode("overwrite").parquet(s"$dir/$table.parquet")
+    write("store_fps", store
       .groupBy(md5(col("text")).as("fp"))
-      .agg(min(col("doc_id")).as("exact_store_id"))
-      .write.mode("overwrite").parquet(s"$dir/store_fps.parquet")
+      .agg(min(col("doc_id")).as("exact_store_id")))
     val sh = DedupExtras.shingleSetsOf(store).cache()
     try {
       // docs under 3 tokens have an empty set and no band row: left out
-      sh.filter(size(col("sh")) > 0).write.mode("overwrite").parquet(s"$dir/store_shingles.parquet")
-      DedupExtras.bandRowsOf(DedupExtras.signaturesOf(sh))
-        .write.mode("overwrite").parquet(s"$dir/store_bands.parquet")
+      write("store_shingles", sh.filter(size(col("sh")) > 0))
+      write("store_bands", DedupExtras.bandRowsOf(DedupExtras.signaturesOf(sh)))
     } finally sh.unpersist()
   }
+
+  /** The schema of each artifact table [[buildStoreArtifacts]] writes, by
+    * table name; [[storeArtifacts]] reads under it, with no schema job.
+    */
+  private val StoreSchemas: Map[String, StructType] = Map(
+    "store_fps" -> StructType(Seq(StructField("fp", StringType), StructField("exact_store_id", LongType))),
+    "store_shingles" -> StructType(Seq(StructField("doc_id", LongType), StructField("sh", ArrayType(StringType)))),
+    "store_bands" -> StructType(Seq(StructField("doc_id", LongType), StructField("band", IntegerType),
+      StructField("bkey", StringType))))
 
   /** The one classification rule, lazy and cache-free: it emits
     * (doc_id, disposition, matched_store_id) for every batch doc, unsorted.

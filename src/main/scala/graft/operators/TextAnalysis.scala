@@ -2110,7 +2110,7 @@ object TextAnalysis {
     * sentence occurrence, with the raw 16-byte fingerprint and the
     * DECIMAL(38,0) global-order key.
     */
-  private[graft] def sentenceUnits(corpus: DataFrame): DataFrame =
+  private def sentenceUnits(corpus: DataFrame): DataFrame =
     corpus
       .select(col("doc_id"), posexplode(split(col("text"), "\\. ")))
       .toDF("doc_id", "pos", "sentence")
@@ -2215,43 +2215,24 @@ object TextAnalysis {
         col("doc_id").cast("decimal(20,0)") * lit(1000000000000L) + col("pos"))
       .cache()
     val sents = unitsAll.filter(col("fp").isNotNull)
-    // the exact-pass survivors feed two consumers (distinct-text minhash
+    // the exact pass: sentence occurrences that are the global first of
+    // their fingerprint. They feed two consumers (distinct-text minhash
     // build + the final anti-join): cache them too, or the fingerprint
     // shuffle re-runs once per consumer
-    val exact = exactSurvivors(sents).cache()
-    try fuzzyTail(unitsAll.select(col("doc_id")).distinct(), sents, exact, minJaccard)
-      .localCheckpoint(true)
-    finally { exact.unpersist(); unitsAll.unpersist() }
-  }
-
-  /** The exact pass: sentence occurrences that are the global first of
-    * their fingerprint.
-    */
-  private def exactSurvivors(sents: DataFrame): DataFrame = {
     val firsts = sents.groupBy(col("fp")).agg(min(col("k")).as("k"))
-    sents.join(firsts, Seq("fp", "k"), "left_semi")
-  }
-
-  /** Lazy plan body of [[fuzzySentenceDedupOf]] — package-private so
-    * PlanShapeSpec pins the REAL shape (the public API materializes
-    * through a localCheckpoint, which would hide the plan behind an RDD
-    * scan). Like the public path, it emits one row per DISTINCT doc_id.
-    */
-  private[graft] def fuzzySentenceDedupPlan(corpus: DataFrame, sents: DataFrame,
-                                            minJaccard: Double): DataFrame =
-    fuzzyTail(corpus.select(col("doc_id")).distinct(), sents, exactSurvivors(sents), minJaccard)
-
-  private def fuzzyTail(corpusIds: DataFrame, sents: DataFrame, exact: DataFrame,
-                        minJaccard: Double): DataFrame = {
-    // one row per DISTINCT sentence text: its first occurrence carries it
-    val distinctTexts = exact
-      .select(col("k").as("doc_id"), trim(col("sentence")).as("text"))
-    val pairs = DedupExtras.minhashVerifiedPairsOf(distinctTexts, minJaccard)
-    // a_id < b_id and k orders by (doc_id, pos): b is always the LATER
-    // first occurrence — the dominated side
-    val dominated = pairs.select(col("b_id").as("k")).distinct()
-    val kept = exact.join(dominated, Seq("k"), "left_anti")
-    sentenceRebuild(corpusIds, sents, kept)
+    val exact = sents.join(firsts, Seq("fp", "k"), "left_semi").cache()
+    try {
+      // one row per DISTINCT sentence text: its first occurrence carries it
+      val distinctTexts = exact
+        .select(col("k").as("doc_id"), trim(col("sentence")).as("text"))
+      val pairs = DedupExtras.minhashVerifiedPairsOf(distinctTexts, minJaccard)
+      // a_id < b_id and k orders by (doc_id, pos): b is always the LATER
+      // first occurrence — the dominated side
+      val dominated = pairs.select(col("b_id").as("k")).distinct()
+      val kept = exact.join(dominated, Seq("k"), "left_anti")
+      sentenceRebuild(unitsAll.select(col("doc_id")).distinct(), sents, kept)
+        .localCheckpoint(true)
+    } finally { exact.unpersist(); unitsAll.unpersist() }
   }
 
   val q68OracleSql: String =

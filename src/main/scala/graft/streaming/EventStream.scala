@@ -74,33 +74,30 @@ object EventStream {
     * hundred rows). One source partition per 32 MB, clamped to
     * [1, defaultParallelism] — a 100 TB stream saturates at the full
     * core count, a fixture-scale replay stops paying for empty state
-    * files. Override via SPARK_GRAFT_STREAM_STATE_PARTITIONS.
+    * files.
     */
   private def statePartitionsFor(spark: org.apache.spark.sql.SparkSession,
-                                 srcPath: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(srcPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = fs.getContentSummary(p).getLength
-      val perPartition = 32L * 1024 * 1024
-      val want = ((bytes + perPartition - 1) / perPartition).toInt
-      math.max(1, math.min(spark.sparkContext.defaultParallelism, want))
-    }
+                                 srcPath: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(srcPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes = fs.getContentSummary(p).getLength
+    val perPartition = 32L * 1024 * 1024
+    val want = ((bytes + perPartition - 1) / perPartition).toInt
+    math.max(1, math.min(spark.sparkContext.defaultParallelism, want))
+  }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`, restoring the
-    * session value after — the conf is consumed by the streaming query at
-    * START (and pinned in its checkpoint), so the override never leaks
-    * into any other query. Scoped, not session config — provided only
-    * one query runs on the session at a time: while `f` runs the value
-    * is session-global, so a query started concurrently on the same
-    * session would pick up `n`, and two overlapping calls could restore
-    * each other's value.
+  /** The session a declared stream runs on: a new session over the
+    * caller's context and catalog, with the caller's runtime SQL conf and
+    * `spark.sql.shuffle.partitions` set to [[statePartitionsFor]] the
+    * source. The caller's own conf is never written, so a query it runs
+    * meanwhile keeps its width.
     */
-  private def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession,
-                                       n: Int)(f: => T): T = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  private def streamSession(spark: org.apache.spark.sql.SparkSession,
+                            srcPath: String): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) s.conf.set(k, v) }
+    s.conf.set("spark.sql.shuffle.partitions", statePartitionsFor(spark, srcPath).toString)
+    s
   }
 
   /** The file SOURCE requires a directory (basePath): small fixtures ship
@@ -146,21 +143,20 @@ object EventStream {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
     val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema)
+    val ss = streamSession(spark, path)
+    val raw = ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(declaredStreamPath(path, "graft_q151_src"))
-    val events = graft.Tables.normalizeEventTs(spark, raw)
+    val events = graft.Tables.normalizeEventTs(ss, raw)
     val name = s"graft_q151_run_${declaredRuns.incrementAndGet()}"
-    withShufflePartitions(spark, statePartitionsFor(spark, path)) {
-      val query = windowedEventCounts(events).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    spark.table(name).select(
+    windowedEventCounts(events).writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode("complete")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    ss.table(name).select(
       col("bucket_start").cast("long").as("bucket_start"),
       col("event_type"),
       col("n_events"),
@@ -208,20 +204,19 @@ object EventStream {
     stageOrdered(srcDir,
       batch.filter(col("ts") < lit(mid)),
       batch.filter(col("ts") >= lit(mid)))
-    val events = spark.readStream.schema(batch.select(col("ts"), col("event_type"), col("value")).schema)
+    val ss = streamSession(spark, srcDir)
+    val events = ss.readStream.schema(batch.select(col("ts"), col("event_type"), col("value")).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
     val name = s"graft_q179_run_${declaredRuns.incrementAndGet()}"
-    withShufflePartitions(spark, statePartitionsFor(spark, srcDir)) {
-      val query = windowedEventCounts(events).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    spark.table(name).select(
+    windowedEventCounts(events).writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    ss.table(name).select(
       col("bucket_start").cast("long").as("bucket_start"),
       col("event_type"),
       col("n_events"),
@@ -614,25 +609,24 @@ object EventStream {
   def streamSessionize(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.Encoders
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream
+    val ss = streamSession(spark, s"$sfDir/events.parquet")
+    val raw = ss.readStream
       .schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(declaredStreamPath(s"$sfDir/events.parquet", "graft_q160_src"))
     implicit val evEnc: org.apache.spark.sql.Encoder[UserEvent] = Encoders.product[UserEvent]
-    val events = graft.Tables.normalizeEventTs(spark, raw)
+    val events = graft.Tables.normalizeEventTs(ss, raw)
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"))
       .as[UserEvent]
     val name = s"graft_q160_run_${declaredRuns.incrementAndGet()}"
-    withShufflePartitions(spark, statePartitionsFor(spark, s"$sfDir/events.parquet")) {
-      val query = sessionAuditStream(events).toDF().writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    spark.table(name)
+    sessionAuditStream(events).toDF().writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode("update")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    ss.table(name)
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("n_sessions"), col("max_session_events"))).as("s"))
       .select(col("user_id"), col("s.n_events").as("n_events"),

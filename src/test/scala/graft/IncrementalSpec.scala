@@ -134,31 +134,20 @@ class IncrementalSpec extends AnyFunSuite {
   private def runClassifyStream(artifacts: String, src: String,
                                 schema: org.apache.spark.sql.types.StructType)
       : (Seq[(Long, String, Long)], Map[Long, Int]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        for (p <- Option(e.properties); q <- Option(p.getProperty("sql.streaming.queryId"));
-             b <- Option(p.getProperty("streaming.sql.batchId"))) jobs.add((q, b.toLong))
-    }
     val out = java.nio.file.Files.createTempDirectory("graft_inc_stream_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_inc_stream_ckpt").toString
-    sc.addSparkListener(listener)
-    val q = try {
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val ran = SparkProbe(spark) {
       val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-      val q = EventStream.classifyAgainstStore(stream, artifacts, out, ckpt).start()
+      q = EventStream.classifyAgainstStore(stream, artifacts, out, ckpt).start()
       q.awaitTermination()
-      q
-    } finally {
-      org.apache.spark.GraftTestBus.drain(sc)
-      sc.removeSparkListener(listener)
     }
     q.exception.foreach(e => throw e)
     val withInput = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSet
-    import scala.jdk.CollectionConverters._
-    val perBatch = jobs.asScala.toSeq.collect { case (id, b) if id == q.id.toString && withInput(b) => b }
+    val perBatch = ran.jobs
+      .filter(p => p.getProperty("sql.streaming.queryId") == q.id.toString)
+      .flatMap(p => Option(p.getProperty("streaming.sql.batchId")).map(_.toLong)).filter(withInput)
       .groupBy(identity).map { case (b, js) => b -> js.size }
     val verdicts = spark.read.parquet(out).as[(Long, String, Long)].collect().toSeq.sortBy(_._1)
     (verdicts, withInput.map(b => b -> perBatch.getOrElse(b, 0)).toMap)
@@ -181,6 +170,17 @@ class IncrementalSpec extends AnyFunSuite {
     // cache or checkpoint — any extra Spark action per batch fails here
     assert(jobsPerBatch.size == 3 && jobsPerBatch.values.forall(_ == 1),
       s"jobs per micro-batch: $jobsPerBatch")
+  }
+
+  test("storeArtifacts reads the artifact tables under their declared schemas: no schema-inference job") {
+    val (artifacts, _, _) = stagedStream(1)
+    // lookup carrier: the shingle sum (two jobs under adaptive execution:
+    // its shuffle stage and its result) and the three table collects;
+    // join carrier: the shingle sum alone. Inferring each table's parquet
+    // schema would add one job per table to both
+    val tables = SparkProbe.jobs(spark)(Incremental.storeArtifacts(spark, artifacts, Long.MaxValue))
+    val frames = SparkProbe.jobs(spark)(Incremental.storeArtifacts(spark, artifacts, 0L))
+    assert((tables, frames) == ((5, 2)), s"storeArtifacts ran $tables jobs (tables), $frames (frames)")
   }
 
   test("a writer created after the artifacts are rebuilt classifies against the new store") {

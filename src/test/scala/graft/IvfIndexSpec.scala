@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression, Expression, IsNotNull}
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -104,15 +103,12 @@ class IvfIndexSpec extends AnyFunSuite {
       "a row whose latest version carries a different label must not match the old label")
   }
 
-  /** The points-table scan of `df`'s executed plan: `df` runs first, so
-    * this is the scan adaptive execution really ran, found structurally.
+  /** The points-table scan that collecting `df` executed, found
+    * structurally in the final adaptive plan.
     */
   private def pointsScan(df: DataFrame, dir: String): FileSourceScanExec = {
-    df.collect()
-    val scans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
-      case s: FileSourceScanExec
-          if s.relation.location.rootPaths.exists(_.toString.contains(IvfIndex.pointsPath(dir))) => s
-    }
+    val scans = SparkProbe(spark)(df.collect()).last.all[FileSourceScanExec]
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains(IvfIndex.pointsPath(dir))))
     assert(scans.size == 1, s"expected one points scan, found ${scans.size}")
     scans.head
   }
@@ -274,29 +270,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(rowsOf(preCatalog) == catalogued)
   }
 
-  /** Spark jobs `body` starts, counted by a listener over a span-scoped
-    * local property (inherited by the broadcast and stage threads).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobcount"
-    val id = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == id)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, id)
-    try body
-    finally {
-      sc.setLocalProperty(key, null)
-      org.apache.spark.GraftTestBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
+  private def jobsOf(body: => Unit): Int = SparkProbe.jobs(spark)(body)
 
   test("job-count pin: a catalogued probe and a catalogued append run a fixed number of Spark jobs") {
     // job counts are deterministic where fixture-scale wall time is not:
@@ -365,10 +339,7 @@ class IvfIndexSpec extends AnyFunSuite {
   private def routeJobs(dir: String, queries: DataFrame): Int =
     jobsOf(IvfIndex.routeOf(spark, IvfIndex.open(spark, dir), queries, nprobe = 1).collect())
 
-  private def windowsIn(df: DataFrame): Int = {
-    df.collect()
-    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case w: WindowExec => w }.size
-  }
+  private def windowsIn(df: DataFrame): Int = SparkProbe(spark)(df.collect()).last.count[WindowExec]
 
   test("a cached handle follows appends and compaction: each probe reads the catalog afresh") {
     import spark.implicits._

@@ -56,6 +56,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(EventStream.streamWindowStats(spark, TestSpark.Sf0001).count() == batch.size.toLong)
   }
 
+  test("declared streams run on their own session: the caller's shuffle width is unchanged during and after") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val streams = Seq(
+      "q151" -> (() => EventStream.streamWindowStats(spark, TestSpark.Sf0001)),
+      "q179" -> (() => EventStream.streamAppendWindows(spark, TestSpark.Sf0001)),
+      "q160" -> (() => EventStream.streamSessionize(spark, TestSpark.Sf0001)))
+    streams.foreach { case (name, run) =>
+      val done = Future(run().count())
+      val seen = scala.collection.mutable.Set.empty[String]
+      while (!done.isCompleted) { seen += spark.conf.get(key); Thread.sleep(2) }
+      assert(Await.result(done, 5.minutes) > 0, s"$name: empty result")
+      assert(seen.forall(_ == before) && spark.conf.get(key) == before,
+        s"$name: the caller's $key read ${seen.mkString(", ")} during the stream, ${spark.conf.get(key)} after; want $before")
+    }
+  }
+
   test("q180 streaming ingest lands byte-identical to the batch upsert lifecycle (q176)") {
     val streamed = EventStream.streamVectorIngest(spark, TestSpark.Sf0001).collect().toSeq
     val batch = graft.operators.IvfIndex.upsertSearch(spark, TestSpark.Sf0001).collect().toSeq

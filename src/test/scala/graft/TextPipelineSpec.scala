@@ -81,31 +81,17 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("construction-eagerness convention: corpusVocab builds a plan with ZERO Spark jobs; sharedVocab memoizes one fit") {
-    // count only jobs from THIS thread (job group): suites share the
-    // session and run concurrently, so a global job count would race
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            "graft_lazy_probe" == js.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
     // table load OUTSIDE the probed region: parquet schema inference runs
     // its own footer-reading job — the convention under test is about the
     // vocab BUILDER, not the source scan
     val docs = Tables.documents(spark, TestSpark.Sf0001)
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup("graft_lazy_probe", "eagerness-convention probe")
-    try {
-      val lazyVocab = TextPipeline.corpusVocab(docs)
+    var lazyVocab: org.apache.spark.sql.DataFrame = null
+    val jobs = SparkProbe.jobs(spark) {
+      lazyVocab = TextPipeline.corpusVocab(docs)
       lazyVocab.queryExecution.optimizedPlan // plan work only
-      Thread.sleep(500)                      // listener delivery is async
-      assert(jobs.get() == 0, "lazy builder must not run cluster work at construction time")
-      assert(lazyVocab.columns.toSeq == Seq("token", "id", "freq"))
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
     }
+    assert(jobs == 0, "lazy builder must not run cluster work at construction time")
+    assert(lazyVocab.columns.toSeq == Seq("token", "id", "freq"))
 
     // the eager surface: one fit per (session, dir), then reference-identical reuse
     TextPipeline.clearVocabMemo()
